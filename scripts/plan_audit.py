@@ -1,7 +1,6 @@
 #!/usr/bin/env python
-"""Registry-wide physical-plan audit (committed per round-12 advice:
-the audit existed only as an ad-hoc session transcript; this makes the
-zero-fact-broadcast claim re-runnable).
+"""Registry-wide physical-plan audit: makes the zero-fact-broadcast
+claim re-runnable.
 
 Two structural sweeps over the formatted plan of every oracle-backed
 batch query in the registry — the classes tests/test_plan_lint.py does
@@ -76,12 +75,10 @@ def audit_fact_broadcast(name: str, plan: str) -> list[str]:
         bounded_depths: list[int] = []
         for sl in sub:
             d = _indent(sl)
-            bounded_depths = [bd for bd in bounded_depths if bd < d] \
-                if BOUNDING.search(sl) is None else bounded_depths
             if BOUNDING.search(sl):
                 bounded_depths.append(d)
-            m = re.search(r"Scan parquet\s*\S*?(\w+)\s*$", sl) or \
-                re.search(r"Scan parquet[^\n]*?(\w+)\b", sl)
+            else:
+                bounded_depths = [bd for bd in bounded_depths if bd < d]
             if "Scan parquet" in sl:
                 tbl = next((t for t in FACT_TABLES if t in sl), None)
                 if tbl and not any(bd < d for bd in bounded_depths):

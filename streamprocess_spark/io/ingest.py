@@ -28,8 +28,6 @@ import base64
 import hashlib
 import os
 
-import pandas as pd
-
 from streamprocess_spark.io.queue_source import enqueue_job
 
 # magic-byte sniffers → (format tag, job type, default priority)
@@ -338,9 +336,9 @@ def _validate(raw: bytes, fmt: str) -> tuple[bool, str]:
 
 def make_envelope(raw: bytes, *, name: str = "", enqueued_at: float = 0.0) -> dict:
     """Pure envelope assembly: sniff, validate, wrap. No I/O — safe to
-    run inside executor UDFs (the streaming edge) as well as the
-    driver-side enqueue path. `type='corrupt_media'` routes low when
-    validation fails — dead-letter, not dropped. Deterministic: job_id
+    run inside executor UDFs as well as the driver-side enqueue path.
+    `type='corrupt_media'` routes low when validation fails —
+    dead-letter, not dropped. Deterministic: job_id
     is a content hash, timestamps are caller-supplied."""
     fmt, jtype, prio = sniff_format(raw)
     ok, err = _validate(raw, fmt) if fmt != "UNKNOWN" else (False, "unknown format")
@@ -514,63 +512,6 @@ def ingest_dir(qdir: str, src_dir: str, enqueued_at: float = 0.0) -> list[dict]:
                 ingest_bytes(qdir, raw, name=fn, enqueued_at=enqueued_at)
             )
     return out
-
-
-def envelope_stream(spark, land_dir: str):
-    """S4/S5 STREAMING edge: watch a landing directory as a
-    Structured Streaming `binaryFile` source and turn every arriving
-    file into a job envelope — the continuous form of `ingest_dir`
-    (the reference's FastAPI upload loop, api/main.py:146-218, as a
-    stream). Envelope assembly (sniff → codec validation → b64 wrap)
-    runs INSIDE executors via an Arrow UDF — no driver-side file
-    handling — and file-source checkpointing gives exactly-once per
-    landed file. Compose with streaming/routing.route_to_storage for
-    the priority-partitioned store + dead-letter split."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    env_schema = T.StructType([
-        T.StructField("job_id", T.StringType()),
-        T.StructField("type", T.StringType()),
-        T.StructField("priority", T.StringType()),
-        T.StructField("format", T.StringType()),
-        T.StructField("size_bytes", T.LongType()),
-        T.StructField("payload_json", T.StringType()),
-    ])
-
-    @pandas_udf(env_schema)
-    def _envelope_udf(path: pd.Series, content: pd.Series) -> pd.DataFrame:
-        import json
-        import os as _os
-
-        rows = []
-        for p, raw in zip(path, content):
-            job = make_envelope(bytes(raw), name=_os.path.basename(p))
-            rows.append({
-                "job_id": job["job_id"],
-                "type": job["type"],
-                "priority": job["priority"],
-                "format": job["payload"]["format"],
-                "size_bytes": job["payload"]["size_bytes"],
-                "payload_json": json.dumps(job["payload"], sort_keys=True),
-            })
-        return pd.DataFrame(rows)
-
-    bin_schema = T.StructType([
-        T.StructField("path", T.StringType()),
-        T.StructField("modificationTime", T.TimestampType()),
-        T.StructField("length", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-    src = (
-        spark.readStream.format("binaryFile")
-        .schema(bin_schema)
-        .load(land_dir)
-    )
-    return src.select(
-        _envelope_udf(F.col("path"), F.col("content")).alias("e")
-    ).select("e.*")
 
 
 def oneof_route_rules() -> dict:

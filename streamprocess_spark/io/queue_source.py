@@ -322,8 +322,8 @@ class PriorityQueueStreamReader(DataSourceStreamReader):
     before low, the reference's drain order, redis_queue.py:157-224).
     Bounded intake per trigger is what keeps executor memory flat when
     the backlog spikes (the reference instead pauses producers at 0.8
-    utilization, src/grpc_server/backpressure.py:77-127; see
-    streaming/backpressure.py for that producer-side gate)."""
+    utilization, src/grpc_server/backpressure.py:77-127; consumer-side
+    pacing replaces that producer gate)."""
 
     def __init__(self, options):
         self.path = options["path"]

@@ -1,12 +1,11 @@
 """Minimal ACID commit-log table format over plain parquet
 ("lakehouse-lite" — §2.13 layout ops, the missing transactional swap).
 
-Delta/Iceberg are absent from this container, so maintenance rewrites
-(io/maintenance.py) previously targeted fresh directories and left the
-swap to the caller. This module supplies the missing commit layer,
-shaped like the public Delta Lake protocol (Armbrust et al.,
-VLDB'20 — an ordered log of add/remove file actions, snapshot =
-fold of the log) reduced to its load-bearing core:
+The engine does not depend on Delta/Iceberg, so this module supplies
+the commit layer that layout rewrites need, shaped like the public
+Delta Lake protocol (Armbrust et al., VLDB'20 — an ordered log of
+add/remove file actions, snapshot = fold of the log) reduced to its
+load-bearing core:
 
   table/
     part-*.parquet                  data files (immutable, never edited)
@@ -25,8 +24,9 @@ fold of the log) reduced to its load-bearing core:
   - Maintenance (compaction / z-order) becomes ONE commit carrying
     {adds for the rewritten files, removes for the originals} — a
     reader sees the table entirely-before or entirely-after, never
-    mixed. This is the OPTIMIZE semantics the maintenance module's
-    docstring deferred.
+    mixed — Delta's OPTIMIZE semantics (exercised by
+    tests/test_txlog.py::test_zorder_rewrite_through_log_prunes with
+    q109's z-order strategy).
   - VACUUM deletes only files that are (a) not referenced by the
     latest snapshot and (b) removed at least `retain_versions` ago —
     pinned older readers keep working within the retention window.
@@ -34,8 +34,7 @@ fold of the log) reduced to its load-bearing core:
 Scale notes: the log stores file-level metadata only (path, rows,
 per-column min/max), so snapshot resolution is O(#commits) driver
 work, independent of data volume; data moves only through ordinary
-executor-parallel parquet jobs. Min/max stats feed file skipping the
-same way prunable_files does for raw layouts.
+executor-parallel parquet jobs. Min/max stats feed file skipping.
 """
 
 from __future__ import annotations

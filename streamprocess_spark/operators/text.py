@@ -98,16 +98,6 @@ def fingerprint(text: Column | str = "text") -> Column:
     return F.md5(F.array_join(toks, " "))
 
 
-def with_text_features(df: DataFrame, text: str = "text") -> DataFrame:
-    return (
-        df.withColumn("n_tokens", token_count(text))
-        .withColumn("n_stopwords", stopword_count(text))
-        .withColumn("quality", quality_score(text))
-        .withColumn("pred_lang", predicted_lang(text))
-        .withColumn("fingerprint", fingerprint(text))
-    )
-
-
 def bm25_topk(
     docs: DataFrame,
     query_terms: tuple[str, ...],

@@ -2545,8 +2545,8 @@ def q122_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the batch is mostly dups the maybe set approaches batch size "
         "and the broadcast confirm stops fitting — the fallback is an "
         "equi-join of the maybe set into a hash-bucketed corpus "
-        "fingerprint table (io/bucketing.py layout), which shuffles "
-        "ONLY the maybe set, still never the corpus.",
+        "fingerprint table, which shuffles ONLY the maybe set, still "
+        "never the corpus.",
 )
 def q153_bloom_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math

@@ -25,7 +25,7 @@ Cross-engine determinism rules every query obeys:
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -92,87 +92,10 @@ _LOADED = False
 # every SURVEY §2 operator id (asserted by tests/test_plan_lint.py).
 # Composites stand in for their constituent thin queries inside the
 # top 50; the constituents stay registered below slot 50 so the repo
-# parity suite still checks each one individually.
-#
-# Round-8 rotation (round-7 verdict #7): 167 registered queries, 50
-# driver slots — eight slots long-green since round <=3 (q4, q7, q8,
-# q10, q31, q32, q69, q70; each with >=2 consecutive driver-green
-# rounds in CORRECTNESS_r06/r07) rotate below slot 50 in favour of
-# queries that never had driver-grade evidence (q99/q111/q122/q135/
-# q139/q149 + the z-order/compaction layout planners). The rotated-out
-# base ids (§2.8, O5, J4, R7, §2.10-builtins, free-rollup/-distinct/
-# -cube) keep full oracle parity in the repo suite every run.
+# parity suite still checks each one individually. The history of
+# which queries rotated in and out of these slots is in HISTORY.md.
 TOP50: tuple[str, ...] = (
-    # relational core. Round-9 rotation (round-8 verdict #3): seven
-    # slots driver-green since round <=2 rotate below 50 in favour of
-    # never-evidenced LLM-pipeline entries — q2 (O1/O4; q9_argmax
-    # repo-checked), q3 (tags fully redundant with q1/q71/q17),
-    # q_semi_anti_join (J-free redundant; S11 proper via q_queue_admin),
-    # q102 (§2.13-text via q_text_suite), q45 (dedup tags carried by
-    # q122/q135/q139/q153/q_doc_signatures; q45 stays bench+soak-
-    # measured every round), q49 (similarity via q48/q73/q99/q111;
-    # stays in the ann_recall bench gate), q71 (A13 via q1; the skew
-    # story lives in the flagship skew leg). q1 stays as the long-green
-    # canary. In: q150_curation_dag (the composed end-to-end artifact),
-    # q112/q124 (the BPE train->apply lifecycle), q141_sequence_packing,
-    # q144_html_extract, q116_lm_perplexity, q118_domain_mixing.
-    # Round-10 rotation (round-9 verdict #2): ten swaps toward
-    # never-evidenced entries. OUT, all driver-green in BOTH
-    # CORRECTNESS_r08 and r09: the five one-shot decision-replay
-    # ledgers q151_sniffer_verdicts (S4), q152_oneof_routing (S13),
-    # q154_idle_reap_replay (T8), q155_offset_commit_ledger (S8 — S8
-    # proper stays top-50 via stream_window_suite), q156_warc_intake_
-    # ledger (S5) — single-decision replays, ideal rotation fodder once
-    # green twice — plus five tag-redundant long-greens: q103_semdedup
-    # (§2.13-dedup/-similarity via q149/q_corpus_suite/q48/q99/q111;
-    # stays the paper-parity query in the repo suite), q73_ann_ivf_topk
-    # (similarity via q48/q99/q111/q97; stays recall-gated in bench),
-    # q109_zorder_layout + q119_compaction_plan (§2.13-layout via
-    # q150), q153_bloom_admission (dedup via q122/q139/q149/q_doc_
-    # signatures; stays soak-measured every round). IN, each verified
-    # bit-exact at sf0.001 (repo suite) and sf0.01 (driver-grade
-    # pre-check) before the swap: the curation/audit family q150
-    # composes but which never individually faced the driver —
-    # q104_repetition_filter, q105_pii_scrub, q106_contamination,
-    # q127_data_splits, q145_url_curation, q126_retrieve_rerank — plus
-    # q97_kmeans (the foundation of the trained-ANN family),
-    # q110_kmv_distinct, q117_scd2_history, q120_image_phash_dedup.
-    # Round-11 rotation (round-10 verdict #1 + #2): eleven swaps toward
-    # the never-evidenced set. OUT, all driver-green >=2 consecutive
-    # rounds and tag-redundant with remaining top-50 entries:
-    # q112/q124/q141/q144/q116/q118 (round-9 ins, green r09+r10;
-    # §2.13-text carried by q104/q105/q106/q127/q145/q126/q_text_suite/
-    # q_corpus_suite), q99/q122/q135/q139 (round-8 ins, green r08-r10;
-    # similarity via q97/q111/q113/q125, dedup via q106/q_doc_
-    # signatures/q149/q86/q87, multimodal via q120/q_codec_ingest_
-    # suite; q135/q139 stay soak-measured every round) and
-    # q48_embedding_topk (green r01-r10; stays the ann_recall ground
-    # truth every bench run). IN, each verified bit-exact at sf0.01
-    # (driver-grade full-registry pre-check) before the swap:
-    # q_dsp_parity (the umbrella carrying the F4/F5/F8/CLAHE/cubic/
-    # warpAffine/h264_i16 parity legs), q138_ocr_chain_parity,
-    # q140_frame_features, q123_corpus_admission,
-    # q142_nb_quality_classifier, q121_autoscaler_sim,
-    # q86_dup_clusters, q87_canonical_corpus, q113_feature_hashing,
-    # q125_embedding_drift, plus q_codec_ingest_suite (verdict #2: one
-    # driver-hashed row per (format, bucket) covering every S15 codec
-    # path's full output).
-    # Round-12 rotation (round-11 verdict #1 + #2): four swaps that
-    # complete the evidence-breadth program. OUT, all driver-green in
-    # BOTH CORRECTNESS_r10 and r11 and tag-redundant: q104_repetition_
-    # filter, q105_pii_scrub, q127_data_splits (§2.13-text carried by
-    # q106/q123/q142/q145/q126/q_text_suite/q_corpus_suite; their
-    # -adjacent tags are long-standing _BELOW_50_ONLY_OK entries) and
-    # q110_kmv_distinct (A5-adjacent/free-approx-distinct likewise;
-    # A5 proper stays top-50 via q20). IN, each verified bit-exact at
-    # sf0.001/sf0.01/sf0.1 before the swap (PARITY_SF001_r11 +
-    # PARITY_SF01_r11 cover all four): the three pre-verified digest
-    # umbrellas q_longtail_suite (15 never-evidenced thin queries),
-    # q_thin_kernels_suite (15 thin audio/image kernels q50-q66
-    # family), stream_thin_suite (8 streaming variants), plus
-    # stream_autoscaler_blend (verdict #2 — the one named evidence
-    # hole: its GroupState blend recurrence gets a direct driver slot;
-    # the oracle is cheap at the gate's sf0.01).
+    # relational core
     "q1_pricing_summary",
     "q150_curation_dag",
     "q_dsp_parity",
@@ -189,17 +112,14 @@ TOP50: tuple[str, ...] = (
     "q20_tumbling_window",
     "q_session_islands",         # q22 + q23
     "q24_topn_per_key",
-    # the REAL multi-trigger streaming sessionizer (S1's file-replay
-    # re-expression, §2.11 state carried across micro-batches), under
-    # the driver gate since late round 8:
+    # the multi-trigger streaming sessionizer (§2.11 state carried
+    # across micro-batches)
     "stream_sessionizer",
     "q148_autoscaler_blend",     # full capacity+PID+predictive blend;
                                  # supersedes q_autoscale_plan's tags
                                  # (q27/q28 stay checked below slot 50)
     "q_worker_metrics",          # q29 + q30
-    # LLM data pipeline — round-10 ins: the curation/audit family that
-    # q150 composes, individually under the driver gate for the first
-    # time
+    # LLM data pipeline: the curation/audit family that q150 composes
     "q106_contamination",
     "q145_url_curation",
     "q126_retrieve_rerank",
@@ -212,25 +132,18 @@ TOP50: tuple[str, ...] = (
     "q86_dup_clusters",
     "q87_canonical_corpus",
     "q_corpus_suite",            # q74 + q75 + q85 + q87 + q88
-    # similarity / sketches — round-10 ins: q97 is the trainer the
-    # whole trained-ANN family (q99/q111/q103/q149) rests on; q110 the
-    # KMV distinct sketch; round-11 ins: q113/q125 (the §2.13 text-
-    # embedding + drift-monitor legs that never faced the driver).
-    # q111 STAYS a third round: its operating point changed this round
-    # (ADC-top-200 exact-rescore tail, round-10 verdict #3) and the new
-    # oracle needs fresh driver evidence.
+    # similarity / sketches: q97 is the trainer the trained-ANN family
+    # (q99/q111/q103/q149) rests on
     "q97_kmeans",
     "q113_feature_hashing",
     "q125_embedding_drift",
     "q111_pq_ann",
     "q149_semdedup_scale",
-    # multimodal (round-10 in: q120 — §2.13-multimodal x dedup;
-    # round-11 in: the per-codec S15 evidence umbrella)
+    # multimodal
     "q120_image_phash_dedup",
     "q_codec_ingest_suite",
-    # round-12 ins: the two batch evidence umbrellas (each digests the
-    # FULL output of 15 never-driver-evidenced constituents into
-    # driver-hashable rows; see their registrations in composites.py)
+    # batch evidence umbrellas: each digests the full output of 15
+    # constituents into driver-hashable rows (see composites.py)
     "q_longtail_suite",
     "q_thin_kernels_suite",
     "q_audio_suite",             # q50 + q51 + q52 + q57 + q58 + WAV
@@ -238,18 +151,15 @@ TOP50: tuple[str, ...] = (
     "q_inference_suite",         # q55 + q56 + dual OCR engines
     "q_media_invariants",        # q59 + q67 + q128 (closed-form invariants)
     "q53_image_layout",
-    # scale joins / frames (round-10 in: q117 — SCD2 history build)
+    # scale joins / frames
     "q117_scd2_history",
     "q_scale_join_suite",        # q79 + q80 + q83
     # streaming
     "stream_window_suite",       # 4 converged streaming runs
     "stream_state_suite",        # session-window + stream-join + top-k
     "sessionize_batch_segments",  # T1/T6/T7 sessionizer (recursive-CTE oracle)
-    # round-12 ins: the streaming evidence umbrella (8 streaming
-    # variants digested) + the last named evidence hole — the
-    # GroupState autoscaler blend twin, directly under the driver gate
-    "stream_thin_suite",
-    "stream_autoscaler_blend",
+    "stream_thin_suite",         # 8 streaming variants digested
+    "stream_autoscaler_blend",   # GroupState autoscaler blend twin
 )
 
 

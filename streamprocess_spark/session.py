@@ -62,10 +62,7 @@ def get_spark(
         # allocation/copy pressure. 2000 keeps binary-heavy batches
         # ~60 MB while costing nothing measurable on narrow rows
         # (there is no maxBytesPerBatch conf as of Spark 4.1).
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "2000"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
         # Small-file split floor (round-8 finding): file-scan planning
@@ -90,8 +87,7 @@ def get_spark(
         # arrays itself, so excluding the rule changes no semantics.
         .config("spark.sql.optimizer.excludedRules",
                 "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-        # saveAsTable targets (bucketed layouts, io/bucketing.py) land in
-        # tmp, never the repo working dir
+        # saveAsTable targets land in tmp, never the repo working dir
         .config(
             "spark.sql.warehouse.dir",
             os.path.join(tempfile.gettempdir(), "spark_graft_warehouse"),
@@ -156,13 +152,13 @@ def local_checkpoint_profile_conf() -> dict[str, str]:
     return {}
 
 
-# RocksDB state-store deployment profile (round-13, round-12 verdict
-# #1). Stage attribution of the flagship RocksDB legs (StreamingQuery
-# progress stateOperators customMetrics, scripts/flagship_profile.py)
-# showed the per-batch state COMMIT dominated by the full-snapshot
-# upload: rocksdbSaveZipFilesLatencyMs 10-16 s + CommitFileSyncLatency
-# 12-17 s summed per micro-batch (32 partitions) — every batch zips and
-# syncs the entire RocksDB checkpoint per partition. Changelog
+# RocksDB state-store deployment profile. Stage attribution of the
+# flagship RocksDB legs (StreamingQuery progress stateOperators
+# customMetrics) showed the per-batch state COMMIT dominated by the
+# full-snapshot upload: rocksdbSaveZipFilesLatencyMs 10-16 s +
+# CommitFileSyncLatency 12-17 s summed per micro-batch (32
+# partitions) — every batch zips and syncs the entire RocksDB
+# checkpoint per partition. Changelog
 # checkpointing (public Spark conf, the documented production setting
 # for frequent-commit stateful workloads) persists the per-batch CHANGE
 # SET instead and snapshots in the background: measured summed commit
@@ -201,18 +197,13 @@ def _prewarmed_daemon_usable() -> bool:
     """Verify a bare interpreter (with the package's parent dir added
     to PYTHONPATH) can import the daemon module, and only COMMIT that
     PYTHONPATH mutation to os.environ when the probe succeeds — a
-    failed or disabled probe leaves the process environment untouched
-    (round-10 advice). Cached — the probe subprocess imports pandas.
-    A skipped/failed probe logs once so bench runs with and without
-    the pre-warmed daemon are distinguishable in their output."""
+    failed probe leaves the process environment untouched. Cached —
+    the probe subprocess imports pandas. A failed probe logs once so
+    runs with and without the pre-warmed daemon are distinguishable in
+    their output."""
     global _DAEMON_PROBE
     if _DAEMON_PROBE is not None:
         return _DAEMON_PROBE
-    if os.environ.get("SPARK_GRAFT_NO_PREWARM_DAEMON"):
-        print("[session] prewarmed worker daemon disabled "
-              "(SPARK_GRAFT_NO_PREWARM_DAEMON)", file=sys.stderr)
-        _DAEMON_PROBE = False
-        return False
     import subprocess
 
     pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

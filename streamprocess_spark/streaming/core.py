@@ -88,7 +88,3 @@ def run_to_completion(
     # micro-batches the AvailableNow replay actually ran
     LAST_RUN["batches"] = (int(lp["batchId"]) + 1) if lp else 0
     return stream_df.sparkSession.table(name)
-
-
-def drop_sentinel(df: DataFrame) -> DataFrame:
-    return df.filter(F.col("user_id") != SENTINEL_USER)

@@ -120,51 +120,6 @@ def test_end_to_end_through_queue_source(spark, tmp_path):
     assert sr == 16000 and len(y) == 1600
 
 
-def test_streaming_ingest_edge(spark, tmp_path):
-    """S4/S5 as a STREAM: files landing in a watched directory flow
-    through executor-side envelope assembly into the priority-
-    partitioned store with a dead-letter split — no driver-side file
-    handling, exactly-once per file via the file-source checkpoint."""
-    from streamprocess_spark.io.ingest import envelope_stream
-    from streamprocess_spark.streaming.routing import route_to_storage
-
-    land = tmp_path / "land"
-    land.mkdir()
-    (land / "a.wav").write_bytes(_wav())
-    (land / "b.flac").write_bytes(_flac())
-    (land / "c.jpg").write_bytes(_jpeg())
-    (land / "d.bin").write_bytes(b"FORM" + b"\x00" * 20)     # unknown
-    (land / "e.wav").write_bytes(_wav()[:16])                # corrupt
-
-    stream = envelope_stream(spark, str(land))
-    out = tmp_path / "store"
-    known = ("stt_batch", "ocr_single", "ocr_batch", "video_batch",
-             "text_batch")
-    q = (
-        route_to_storage(stream, str(out), known, type_col="type")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    valid = spark.read.parquet(str(out / "valid"))
-    rows = {r["format"]: r for r in valid.collect()}
-    assert set(rows) == {"WAV", "FLAC", "JPEG"}
-    assert rows["FLAC"]["type"] == "stt_batch"
-    assert rows["JPEG"]["priority"] == "normal"
-    # payload round-trips to the exact uploaded bytes
-    import base64 as b64
-    import json
-
-    payload = json.loads(rows["WAV"]["payload_json"])
-    assert b64.b64decode(payload["content_b64"]) == _wav()
-
-    dead = spark.read.parquet(str(out / "dead_letter"))
-    dead_types = sorted(r["type"] for r in dead.collect())
-    assert dead_types == ["corrupt_media", "unsupported_media"]
-
-
 # ---------------------------------------------------------------------------
 # Round-4 verdict #4: one e2e case per _SNIFFERS entry (valid AND a
 # corrupt variant) so every codec's validation path is proven on the

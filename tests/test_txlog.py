@@ -85,8 +85,11 @@ def test_zorder_rewrite_through_log_prunes(spark, tmp_path):
     """The q109 z-order strategy executed as ONE txlog commit: the
     rewritten layout prunes a 2D predicate better than the time-linear
     original, measured on the live snapshot's own files."""
-    from streamprocess_spark.io.maintenance import z_value
+    from streamprocess_spark.plans.scale_joins import _z_interleave_sql
 
+    # q109's Morton code; the oracle text uses DuckDB's `//`, which
+    # Spark SQL spells `div`
+    z_value = F.expr(_z_interleave_sql("a", "b").replace("//", "div"))
     rows = spark.range(0, 20000).select(
         (F.col("id") % 128).alias("a"),
         ((F.col("id") * 37) % 128).alias("b"),
@@ -113,7 +116,7 @@ def test_zorder_rewrite_through_log_prunes(spark, tmp_path):
     before_hit, before_total = candidates(v0)
     zsorted = (
         t.read(spark)
-        .withColumn("z", z_value(F.col("a"), F.col("b"), bits=7))
+        .withColumn("z", z_value)
         .repartitionByRange(16, "z")
         .sortWithinPartitions("z")
         .drop("z")
