@@ -82,9 +82,29 @@ def _scan_log(path: str, every: int) -> tuple[int, dict[int, int]]:
     if not os.path.exists(path):
         return 0, {}
     offsets: dict[int, int] = {0: 0}
-    n = 0
-    pos = 0
+    n, _ = _scan_tail(path, every, 0, 0, offsets)
+    return n, offsets
+
+
+def _scan_tail(path: str, every: int, n: int, pos: int,
+               offsets: dict[int, int]) -> tuple[int, int]:
+    """Continue a scan that has counted ``n`` lines ending at byte
+    ``pos`` (the byte after the last counted newline): count the
+    newline-terminated lines after ``pos``, add every ``every``-th line
+    start to ``offsets``, and return the new ``(n, pos)``. A torn
+    trailing line stays uncounted, so the next call re-reads it. A log
+    shorter than ``pos`` broke the append-only contract: raise."""
+    size = os.path.getsize(path) if os.path.exists(path) else 0
+    if size < pos:
+        raise RuntimeError(
+            f"priority log {path} shrank to {size} bytes below the "
+            f"{pos} bytes already counted; logs must be append-only"
+        )
+    if size == pos:
+        return n, pos
     with open(path, "rb") as f:
+        f.seek(pos)
+        block_start = pos
         while True:
             block = f.read(_SCAN_BLOCK)
             if not block:
@@ -96,10 +116,12 @@ def _scan_log(path: str, every: int) -> tuple[int, dict[int, int]]:
                     break
                 n += 1
                 if every > 0 and n % every == 0:
-                    offsets[n] = pos + j + 1
+                    offsets[n] = block_start + j + 1
                 at = j + 1
-            pos += len(block)
-    return n, offsets
+            if at:
+                pos = block_start + at
+            block_start += len(block)
+    return n, pos
 
 
 def _count_lines(path: str) -> int:
@@ -333,10 +355,13 @@ class PriorityQueueStreamReader(DataSourceStreamReader):
             options.get("read_partition_lines", _READ_PARTITION_LINES)
         )
         self._cursor: dict | None = None  # last planned end offsets
-        # per-priority every-chunk-lines byte index, refreshed by each
+        # per-priority every-chunk-lines byte index, extended by each
         # latestOffset scan; the logs are append-only so entries never
         # go stale — planning reuses it instead of rescanning
         self._index: dict[str, dict[int, int]] = {}
+        # per-priority (lines counted, byte after the last counted
+        # newline): where the next latestOffset scan resumes
+        self._tail: dict[str, tuple[int, int]] = {}
 
     def initialOffset(self) -> dict:
         return {p: 0 for p in PRIORITIES}
@@ -351,9 +376,13 @@ class PriorityQueueStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:
         avail = {}
         for p in PRIORITIES:
-            n, index = _scan_log(_log_path(self.path, p), self.chunk)
+            # scan only the bytes appended since the previous call
+            if p not in self._tail:
+                self._index[p] = {0: 0}
+            n, pos = _scan_tail(_log_path(self.path, p), self.chunk,
+                                *self._tail.get(p, (0, 0)), self._index[p])
+            self._tail[p] = (n, pos)
             avail[p] = n
-            self._index[p] = index
         if self.max_per_batch is None:
             self._cursor = avail
             return avail

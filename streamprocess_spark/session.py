@@ -99,16 +99,22 @@ def get_spark(
     )
     for k, v in local_checkpoint_profile_conf().items():
         builder = builder.config(k, v)
-    # Pre-warmed worker daemon (see worker_daemon.py): forked Python
-    # workers inherit numpy/pandas/Arrow-serializer imports via
-    # copy-on-write instead of re-importing per fresh worker (~0.5 s
-    # each — the measured wall floor under every stateful micro-batch).
-    # The daemon is launched `python -m <module>` with the JVM's env
-    # (inherited from this driver in local mode), so the package's
-    # parent dir goes on PYTHONPATH here, BEFORE the JVM starts; the
-    # subprocess probe then proves a bare interpreter with that env can
-    # import the module — environments where it can't keep the stock
-    # pyspark.daemon instead of failing worker creation.
+    # Python processes the JVM launches inherit its env (this driver's,
+    # in local mode), so the PYTHONPATH committed here BEFORE the JVM
+    # starts reaches all of them. It carries two entries:
+    #   - the package's parent dir, so task workers can run the
+    #     pre-warmed daemon (worker_daemon.py): forked workers inherit
+    #     numpy/pandas/Arrow-serializer imports instead of re-importing
+    #     them. spark.python.daemon.module reaches task runners only;
+    #     data-source planner runners (the per-trigger write setup and
+    #     sink commit) call the createPythonWorker overload that
+    #     hardcodes the stock pyspark.daemon;
+    #   - worker_site/, whose sitecustomize.py CPython runs at startup
+    #     in EVERY launched process, planner runners included: it
+    #     installs the zipimport guard.
+    # One subprocess probe proves a bare interpreter with that env can
+    # import both; environments where it can't keep the stock daemon
+    # and an untouched PYTHONPATH instead of failing worker creation.
     if _prewarmed_daemon_usable():
         builder = builder.config(
             "spark.python.daemon.module", "streamprocess_spark.worker_daemon"
@@ -194,8 +200,9 @@ _DAEMON_PROBE: bool | None = None
 
 
 def _prewarmed_daemon_usable() -> bool:
-    """Verify a bare interpreter (with the package's parent dir added
-    to PYTHONPATH) can import the daemon module, and only COMMIT that
+    """Verify a bare interpreter, with the package's parent dir and
+    ``worker_site/`` added to PYTHONPATH, runs the ``worker_site``
+    startup hook and can import the daemon module. Only COMMIT that
     PYTHONPATH mutation to os.environ when the probe succeeds — a
     failed probe leaves the process environment untouched. Cached —
     the probe subprocess imports pandas. A failed probe logs once so
@@ -206,21 +213,24 @@ def _prewarmed_daemon_usable() -> bool:
         return _DAEMON_PROBE
     import subprocess
 
-    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    site_dir = os.path.join(pkg_dir, "worker_site")
     existing = os.environ.get("PYTHONPATH", "")
-    if pkg_parent not in existing.split(os.pathsep):
-        probe_pp = (
-            f"{pkg_parent}{os.pathsep}{existing}" if existing else pkg_parent
-        )
-    else:
-        probe_pp = existing
+    entries = existing.split(os.pathsep) if existing else []
+    probe_pp = os.pathsep.join(
+        [d for d in (site_dir, os.path.dirname(pkg_dir)) if d not in entries]
+        + entries
+    )
     env = os.environ.copy()
     env["PYTHONPATH"] = probe_pp
+    probe = (
+        "import os, sitecustomize, streamprocess_spark.worker_daemon; "
+        f"raise SystemExit(os.path.dirname(sitecustomize.__file__) != {site_dir!r})"
+    )
     try:
         _DAEMON_PROBE = (
             subprocess.run(
-                [sys.executable, "-c",
-                 "import streamprocess_spark.worker_daemon"],
+                [sys.executable, "-c", probe],
                 env=env,
                 capture_output=True,
                 timeout=60,
@@ -230,7 +240,8 @@ def _prewarmed_daemon_usable() -> bool:
         _DAEMON_PROBE = False
     if _DAEMON_PROBE:
         # commit the PYTHONPATH the JVM must inherit for the daemon
-        # launch — only now that the probe proved it works
+        # launch and the startup hook — only now that the probe proved
+        # it works
         os.environ["PYTHONPATH"] = probe_pp
     else:
         print("[session] prewarmed worker daemon unavailable "

@@ -1,21 +1,26 @@
 """Pre-warmed PySpark worker daemon (``spark.python.daemon.module``).
 
-Round-10 flagship profiling: jstack sampling of the even leg showed
-executor task threads dominated by ``BasePythonRunner$ReaderInputStream
-.read`` (waiting on Python workers) with ``createPythonWorker`` /
-``startDaemon`` frames hot, and /proc sampling showed each stateful
-micro-batch acquiring workers beyond the reused pool — every fresh
-fork re-imported numpy (~0.18 s) + pandas (~0.29 s) + the Arrow
-serializer stack *inside the task*, putting an ~1.1 s wall floor under
-every armed-timeout trigger (32 state partitions x 2 chained Python
-runners per task).
-
 The stock ``pyspark.daemon`` forks workers that inherit only pyspark
-core imports. This drop-in daemon module pre-imports the heavy
-libraries every UDF in this engine touches BEFORE the fork loop
-starts, so children inherit them via copy-on-write — a fork costs
-pages, not imports. Values are untouched: this changes process
-warm-up, never execution.
+core imports, so every fresh fork re-imports numpy, pandas and the
+Arrow serializer stack inside its task. This drop-in daemon module
+pre-imports the heavy libraries every UDF in this engine touches BEFORE
+the fork loop starts, so children inherit them via copy-on-write — a
+fork costs pages, not imports. Values are untouched: this changes
+process warm-up, never execution.
+
+Which processes get what:
+
+- **Pre-imports: task workers only.** Spark launches a daemon with
+  ``spark.python.daemon.module`` only for task runners (UDFs,
+  ``applyInPandasWithState``, data-source reads and writes). Data-source
+  *planner* runners — ``createWriteInfoInPython`` and the streaming sink
+  commit, run on the driver every trigger — go through the
+  ``createPythonWorker`` overload that hardcodes Spark's default daemon
+  module, so they run under the stock ``pyspark.daemon`` and never
+  import this file.
+- **zipimport guard: every process.** The guard lives in
+  ``worker_site/sitecustomize.py``, a startup hook that CPython runs in
+  every interpreter the JVM launches, planner runners included.
 
 Only always-installed third-party modules are pre-imported
 unconditionally; the engine's own package is attempted best-effort
@@ -56,65 +61,6 @@ for _mod in (
         importlib.import_module(_mod)
     except Exception:  # pragma: no cover - cwd-dependent
         pass
-
-
-# ---------------------------------------------------------------------------
-# zipimport cache-invalidation mtime guard (the round-10 flagship
-# profile's single largest per-task term). pyspark's worker main()
-# calls importlib.invalidate_caches() on EVERY task
-# (worker_util.setup_spark_files); on Python 3.11 zipimporter
-# .invalidate_caches() re-reads the archive's central directory
-# UNCONDITIONALLY, so each task re-parsed pyspark.zip + py4j + the
-# shipped package zip — cProfile inside the workers measured 0.65 s
-# of zipimport._read_directory per task, i.e. most of the ~0.8-1.0 s
-# wall under every stateful micro-batch task. CPython 3.12 changed
-# invalidate_caches to skip the re-read when the archive's
-# (mtime, size) is unchanged (gh-85108); this is that guard,
-# backported by wrapping the method. A genuinely modified archive
-# still invalidates — semantics match 3.12, only redundant re-reads
-# are skipped. On 3.12+ the wrapper is a no-op by construction (the
-# stat check there is redundant but harmless and ~free).
-# ---------------------------------------------------------------------------
-
-import os as _os
-import sys as _sys
-import zipimport as _zipimport
-
-_orig_invalidate = _zipimport.zipimporter.invalidate_caches
-
-
-def _invalidate_if_changed(self):  # noqa: ANN001 - stdlib signature
-    try:
-        st = _os.stat(self.archive)
-        # untruncated ns mtime: an archive rebuilt within the same
-        # second (same size) must still invalidate — CPython gh-85108
-        # compares the full-resolution mtime (round-10 advice)
-        key = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return _orig_invalidate(self)
-    if getattr(self, "_spark_graft_zip_key", None) == key and getattr(
-        self, "_files", None
-    ):
-        return None
-    try:
-        return _orig_invalidate(self)
-    finally:
-        self._spark_graft_zip_key = key
-
-
-if _sys.version_info < (3, 12):
-    _zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
-    # Warm every already-cached zipimporter NOW, in the daemon: the
-    # guard keys live on the importer instances, which forked workers
-    # inherit via copy-on-write — so even a worker that is NOT reused
-    # (the stateful runner tears its worker down after each task, the
-    # measured common case) skips the re-read on its first and only
-    # invalidate_caches(). Without this, the key is only ever set in
-    # short-lived children and every fresh fork re-parses the
-    # pyspark.zip central directory again.
-    import importlib as _importlib
-
-    _importlib.invalidate_caches()
 
 
 if __name__ == "__main__":

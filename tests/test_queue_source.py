@@ -155,6 +155,50 @@ def test_torn_write_not_counted_until_newline(spark, tmp_path):
     assert spark.read.format("priority_queue").option("path", qdir).load().count() == 2
 
 
+def test_latest_offset_scans_incrementally(tmp_path, monkeypatch):
+    """latestOffset resumes each log scan after the last counted
+    newline: across appends (a torn line completed later included) its
+    counts and byte index equal a fresh full ``_scan_log``, and a log
+    truncated below the resume point raises."""
+    import pytest
+
+    from streamprocess_spark.io import queue_source as qs
+
+    monkeypatch.setattr(qs, "_SCAN_BLOCK", 7)  # lines span block edges
+    qdir = str(tmp_path / "qi")
+    reader = qs.PriorityQueueStreamReader(
+        {"path": qdir, "read_partition_lines": "3"})
+
+    def check():
+        end = reader.latestOffset()
+        for p in qs.PRIORITIES:
+            n, index = qs._scan_log(qs._log_path(qdir, p), 3)
+            assert end[p] == n
+            assert reader._index[p] == (index or {0: 0})
+
+    check()  # no logs yet
+    log = qs._log_path(qdir, "high")
+    for i in range(5):
+        enqueue_job(qdir, "high", {"job_id": f"h{i}", "pad": "x" * i})
+        check()
+    enqueue_job(qdir, "low", {"job_id": "l0"})
+    with open(log, "a") as f:
+        f.write('{"job_id": "torn", "ty')  # no trailing newline
+    check()
+    assert reader.latestOffset()["high"] == 5
+    with open(log, "a") as f:
+        f.write('pe": "t"}\n')
+    for i in range(4):
+        enqueue_job(qdir, "high", {"job_id": f"g{i}"})
+    check()
+    assert reader.latestOffset()["high"] == 10
+
+    with open(log, "r+") as f:
+        f.truncate(10)
+    with pytest.raises(RuntimeError, match="append-only"):
+        reader.latestOffset()
+
+
 def test_max_records_per_batch_bounds_intake(spark, tmp_path):
     """P5 backpressure: with max_records_per_batch=N no micro-batch
     admits more than N rows, and the budget drains priority-descending
@@ -443,53 +487,6 @@ def test_arrow_read_path_matches_row_contract(tmp_path):
     ]
     assert got == ref and len(got) == 26
     assert list(_read_arrow(QueuePartition("low", 0, 0, qdir))) == []
-
-
-def test_worker_daemon_zipimport_guard(tmp_path):
-    """Round 10: the daemon's mtime guard must skip the directory
-    re-read for an unchanged archive and still re-read when the
-    archive genuinely changes (CPython 3.12 semantics backported)."""
-    import sys
-    import zipfile
-    import zipimport
-
-    from streamprocess_spark.worker_daemon import _invalidate_if_changed
-
-    if sys.version_info >= (3, 12):
-        import pytest
-
-        pytest.skip("guard is a no-op wrapper on 3.12+")
-
-    zpath = str(tmp_path / "mod.zip")
-    with zipfile.ZipFile(zpath, "w") as zf:
-        zf.writestr("m1.py", "X = 1\n")
-    zi = zipimport.zipimporter(zpath)
-    assert "m1" in str(zi._files)
-    calls = []
-    orig_read = zipimport._read_directory
-
-    def counting_read(archive):
-        calls.append(archive)
-        return orig_read(archive)
-
-    zipimport._read_directory = counting_read
-    try:
-        _invalidate_if_changed(zi)      # first call records the key
-        n_first = len(calls)
-        _invalidate_if_changed(zi)      # unchanged archive: skipped
-        assert len(calls) == n_first
-        # a genuinely modified archive re-reads (bump mtime + content)
-        import os
-        with zipfile.ZipFile(zpath, "w") as zf:
-            zf.writestr("m1.py", "X = 2\n")
-            zf.writestr("m2.py", "Y = 3\n")
-        st = os.stat(zpath)
-        os.utime(zpath, (st.st_atime, st.st_mtime + 5))
-        _invalidate_if_changed(zi)
-        assert len(calls) > n_first
-        assert "m2" in str(zi._files)
-    finally:
-        zipimport._read_directory = orig_read
 
 
 def test_byte_index_seek_matches_skip_scan(tmp_path):
