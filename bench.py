@@ -2,9 +2,10 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
+Prints the full result as one JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...},
-   "sf": ..., "deep": {"factor": 10, "value": N, "queries": {...}}}
+   "sf": ..., "deep": {"factor": 10, "value": N, "queries": {...}}, ...}
+then its compact summary (`_compact`) as the final stdout line.
 
 The "deep" section re-times the same queries on a 10x key-shifted
 upscale of the base tables (generated once into a cached dir). At
@@ -13,55 +14,33 @@ so round-over-round deltas there are noise; the deep run is where
 plan-quality regressions (extra shuffles, lost pushdowns, skew) are
 actually visible. Set SPARK_GRAFT_SKIP_DEEP=1 to skip it.
 
-Round-4 regression post-mortem (the "explain or erase" ask): BENCH_r04
-inflated uniformly (+8-20% headline, deep q55 1.88x) on unchanged
-query code. Two causes, both fixed in round 5 and confirmed erased by
-re-measurement (headline 12.27 s -> ~6.3 s, deep q55 back under its
-round-3 time): (1) every builder called spark.read.parquet for all 10
-tables inside the timed region — a per-call JVM round-trip + footer
-read (~0.8 s/query) that grew with table count and dominated the sf0.1
-floor; io/tables.py now memoizes the scan DataFrames per (session,
-dir), the catalog shape any engine would use. (2) the deep section was
-single-run and executed after the flagship streaming bench, inheriting
-JVM/GC state; deep is now min-of-2 and runs before flagship, and the
-flagship query drains on an idle trigger before stop() so no
-micro-batch aborts into the log. A round-over-round regression gate
-(>1.5x per query vs the previous BENCH json) prints into the output so
-a future silent inflation cannot land unexplained again.
+Every leg is timed by `_time_passes` (min of interleaved passes,
+single-run above 30 s), and `_regression_gate` compares the run with
+the committed BENCH_r*.json history at the same sf, so a silent
+inflation cannot land unexplained.
 """
 
 from __future__ import annotations
 
 import contextlib
+import dataclasses
 import json
 import os
+import re
 import shutil
 import sys
 import tempfile
 import time
 
-DEEP_FACTOR = int(os.environ.get("SPARK_GRAFT_DEEP_FACTOR", "10"))
+DEEP_FACTOR = 10
 
-# ---------------------------------------------------------------------------
-# Timing action (round-8 measurement audit). Rounds 1-8 timed queries
-# with `.count()`, which is WRONG as a benchmark action: under a pure
-# row count Catalyst prunes every unreferenced column and ELIMINATES
-# unique-key left joins, so expression-heavy stages silently dropped
-# out of the measurement. Audited per bench query (optimized count
-# plan vs full plan): q50_audio_decode lost its decode UDF entirely
-# (1.4 s "count" vs 7.6 s real at sf0.1), q135_cdc_dedup lost both
-# joins and all three CDC UDFs (0.2 s vs 47.9 s real), and
-# q103/q149's members LEFT JOIN pair_stats — unique on the join key —
-# was eliminated outright, so their soak history measured the k-means
-# stage only, never the pair enumeration. All other bench queries'
-# count plans matched their full plans (joins/scans/Python nodes).
-# The fix: time a noop-sink write, which materializes every column of
-# every row. Correctness was never affected (the driver and the parity
-# suites execute full results); only wall-clock attribution was.
-# `timing_action` is stamped into the output so the regression gate
-# never compares across methodologies.
-# ---------------------------------------------------------------------------
-
+# Timing action: a noop-sink write, which materializes every column of
+# every row. `.count()` is wrong as a benchmark action: under a pure
+# row count Catalyst prunes every unreferenced column and eliminates
+# unique-key left joins, so expression-heavy stages drop out of the
+# measurement (q50 loses its decode UDF, q135 both joins and all three
+# CDC UDFs). `timing_action` is stamped into the output so the
+# regression gate never compares across methodologies.
 TIMING_ACTION = "noop_write"
 
 # min-of-2 exists to defeat transient GC/OS noise bursts, which are a
@@ -70,10 +49,95 @@ TIMING_ACTION = "noop_write"
 _MIN_OF_2_CUTOFF_S = 30.0
 
 
+@dataclasses.dataclass
+class Timed:
+    """One job's passes: wall seconds and result, one entry per pass."""
+
+    runs: list[float] = dataclasses.field(default_factory=list)
+    outs: list = dataclasses.field(default_factory=list)
+
+    @property
+    def best(self) -> float:
+        return min(self.runs)
+
+
+def _time_passes(jobs, passes: int = 2,
+                 cutoff: float | None = _MIN_OF_2_CUTOFF_S, settle=None,
+                 clock=time.perf_counter) -> dict[str, Timed]:
+    """Time ordered ``(key, thunk)`` jobs over `passes` INTERLEAVED
+    passes: every job once, in order, then every job again. Back-to-back
+    repeats of one job share any transient GC/OS noise burst, which
+    defeats the min; a full pass in between decorrelates the samples.
+    From the second pass on, a job whose best so far is above `cutoff`
+    seconds is not run again (`None`: every pass runs every job).
+    `settle`, when given, is applied to each thunk's result outside the
+    timed region, and its return is what `outs` records."""
+    timed = {key: Timed() for key, _ in jobs}
+    for p in range(passes):
+        for key, thunk in jobs:
+            t = timed[key]
+            if p and cutoff is not None and t.best > cutoff:
+                continue
+            t0 = clock()
+            out = thunk()
+            t.runs.append(clock() - t0)
+            t.outs.append(out if settle is None else settle(out))
+    return timed
+
+
 def _run_full(df) -> None:
     """Fully materialize the plan (all columns, all rows) without
     collecting — the benchmark timing action."""
     df.write.format("noop").mode("overwrite").save()
+
+
+def _query_job(spark, builder, d: str):
+    """Thunk for `_time_passes`: build the query on dir `d`, run it
+    with the timing action, and return its DataFrame."""
+    def run():
+        df = builder(spark, d)
+        _run_full(df)
+        return df
+    return run
+
+
+def _bench_queries(spark, names: list[str], d: str,
+                   label: str = "") -> dict[str, float]:
+    """Best (unrounded) seconds of each named query on dir `d`."""
+    from streamprocess_spark.plans import QUERIES
+
+    timed = _time_passes(
+        [(n, _query_job(spark, QUERIES[n].builder, d)) for n in names])
+    for n in names:
+        rows = timed[n].outs[-1].count()  # display-only, untimed
+        print(f"# {label}{n}: {timed[n].best:.3f}s ({rows} rows)",
+              file=sys.stderr)
+    return {n: timed[n].best for n in names}
+
+
+@contextlib.contextmanager
+def _spark_conf(spark, conf: dict[str, str | None]):
+    """Set each session conf for the block (None unsets it), then put
+    every key back to what it was before."""
+    saved: dict[str, str | None] = {}
+    for k, v in conf.items():
+        try:
+            saved[k] = spark.conf.get(k)
+        except Exception:
+            saved[k] = None
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is not None:
+                spark.conf.set(k, v)
+            else:
+                spark.conf.unset(k)
+
 
 # key shifts per replica: keep every FK relationship intact
 # (orders.o_custkey ↔ customer.c_custkey shift together; lineitem
@@ -119,13 +183,16 @@ _DEEP_SQL = {
     ),
 }
 
-_COPY_TABLES = ("region", "nation", "supplier", "part")
+
+def _replica_sql(sf_dir: str, table: str, factor: int) -> str:
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    return _DEEP_SQL[table].format(f=factor).replace("src", repr(src))
 
 
 def _deep_cache_key(sf_dir: str) -> str:
     """Identity of the base data: path + per-table (size, mtime). A
-    changed base dir invalidates the cached upscale (round-4 nit: a
-    stale _DONE marker would silently bench old data)."""
+    changed base dir invalidates the cached upscale, so a stale _DONE
+    marker cannot silently bench old data."""
     parts = [os.path.abspath(sf_dir)]
     for name in sorted(os.listdir(sf_dir)):
         if name.endswith(".parquet"):
@@ -138,8 +205,8 @@ def _assert_upscale_id_bounds(sf_dir: str) -> None:
     """The replica shifts in _DEEP_SQL and ensure_recall_dir assume id
     headroom in the base corpus (vec_id/doc_id/user_id < 1e6,
     order/customer keys < 1e7); a bigger base would silently collide
-    replica ids with base ids (round-9 advice). Assert the bound once
-    per generation — cache hits skip it, generation is minutes anyway."""
+    replica ids with base ids. Assert the bound once per generation —
+    cache hits skip it, generation is minutes anyway."""
     import duckdb
 
     checks = (
@@ -161,7 +228,7 @@ def _assert_upscale_id_bounds(sf_dir: str) -> None:
             if mx is not None and mx >= bound:
                 # a hard error, not an assert: collided replica ids
                 # silently corrupt the upscale, and asserts vanish
-                # under python -O (round-10 advice)
+                # under python -O
                 raise ValueError(
                     f"{table}.{col} max {mx} >= replica shift {bound}: the "
                     f"upscale would collide replica ids with base ids"
@@ -182,16 +249,31 @@ def _prestage_tables(d: str) -> None:
             table_path(d, name)
 
 
-def ensure_deep_dir(sf_dir: str, factor: int = DEEP_FACTOR) -> str:
-    """Generate (once, cached) a factor-x upscale of the base tables."""
+def _write_upscale(dst: str, copy_from: str, tables: dict[str, str]) -> None:
+    """Write each `tables` entry (table -> DuckDB SELECT) as parquet
+    into `dst`, and copy every other parquet file of `copy_from`."""
     import duckdb
 
-    dst = os.environ.get(
-        "SPARK_GRAFT_DEEP_DIR",
-        os.path.join(tempfile.gettempdir(), f"spark_graft_deep_x{factor}"),
-    )
+    for name in os.listdir(copy_from):
+        if name.endswith(".parquet") \
+                and name.removesuffix(".parquet") not in tables:
+            shutil.copy(os.path.join(copy_from, name),
+                        os.path.join(dst, name))
+    with contextlib.closing(duckdb.connect()) as con:
+        for t, sql in tables.items():
+            con.execute(
+                f"COPY ({sql}) TO '{os.path.join(dst, t + '.parquet')}' "
+                f"(FORMAT PARQUET)"
+            )
+
+
+def _cached_upscale(sf_dir: str, env: str, name: str, key: str,
+                    build) -> str:
+    """The generated dir at $`env` (default $TMPDIR/`name`). It is
+    reused while its _DONE marker holds `key`; otherwise it is wiped
+    and `build(dst)` writes it again. Prestaged either way."""
+    dst = os.environ.get(env, os.path.join(tempfile.gettempdir(), name))
     marker = os.path.join(dst, "_DONE")
-    key = _deep_cache_key(sf_dir)
     if os.path.exists(marker):
         with open(marker) as f:
             if f.read() == key:
@@ -200,78 +282,57 @@ def ensure_deep_dir(sf_dir: str, factor: int = DEEP_FACTOR) -> str:
         shutil.rmtree(dst, ignore_errors=True)  # stale: regenerate
     _assert_upscale_id_bounds(sf_dir)
     os.makedirs(dst, exist_ok=True)
-    for t in _COPY_TABLES:
-        shutil.copy(
-            os.path.join(sf_dir, f"{t}.parquet"),
-            os.path.join(dst, f"{t}.parquet"),
-        )
-    con = duckdb.connect()
-    for t, sql in _DEEP_SQL.items():
-        src = os.path.join(sf_dir, f"{t}.parquet")
-        con.execute(
-            f"COPY ({sql.format(f=factor).replace('src', repr(src))}) "
-            f"TO '{os.path.join(dst, t + '.parquet')}' (FORMAT PARQUET)"
-        )
+    build(dst)
     with open(marker, "w") as f:
         f.write(key)
     _prestage_tables(dst)
     return dst
 
 
+def ensure_deep_dir(sf_dir: str, factor: int = DEEP_FACTOR) -> str:
+    """Generate (once, cached) a factor-x upscale of the base tables."""
+    return _cached_upscale(
+        sf_dir, "SPARK_GRAFT_DEEP_DIR", f"spark_graft_deep_x{factor}",
+        _deep_cache_key(sf_dir),
+        lambda dst: _write_upscale(dst, sf_dir, {
+            t: _replica_sql(sf_dir, t, factor) for t in _DEEP_SQL}),
+    )
+
+
 # ---------------------------------------------------------------------------
-# scale soak (round-6 verdict ask #1): the dedup/ANN family's "bucketed,
-# never all-pairs" claims were plan-shape arguments; this measures them.
-# Each query runs at deep x10 AND x100 and the x100/x10 runtime ratio is
-# gated at SOAK_MAX_RATIO — near-linear (~10x work) must stay ~10x time;
-# a quadratic (all-pairs) regression would show ~100x and flag.
+# scale soak: the dedup/ANN family's "bucketed, never all-pairs" claims
+# are plan-shape arguments; this measures them. Each query runs at deep
+# x10 AND x100 and the x100/x10 runtime ratio is gated at
+# SOAK_MAX_RATIO — near-linear (~10x work) must stay ~10x time; a
+# quadratic (all-pairs) regression would show ~100x and flag.
 # ---------------------------------------------------------------------------
 
-SOAK_FACTOR = int(os.environ.get("SPARK_GRAFT_SOAK_FACTOR", "100"))
+SOAK_FACTOR = 100
 SOAK_MAX_RATIO = 15.0
 SOAK_QUERIES = (
     "q45_minhash_lsh",
     "q149_semdedup_scale_auto",
     "q122_incremental_dedup",
-    # bloom-prefiltered exact admission (round 8): linear by design —
+    # bloom-prefiltered exact admission: linear by design —
     # 2 corpus scans, 0 corpus shuffles, index auto-sized to the corpus
     "q153_bloom_admission",
-    # re-added late round 8 (see the q135 note below): x10 ~10-19 s,
-    # x100 ~69 s, ratio ~3.6 once the fixture artifacts were fixed
     "q135_cdc_dedup",
-    # round-10 verdict #5: the one dedup-family member with a
-    # corpus-wide shuffle (gram-hash counts) — its x100 behavior was
-    # the scale-credibility gap in the dedup story
+    # the one dedup-family member with a corpus-wide shuffle (gram-hash
+    # counts)
     "q139_substring_spans",
-    # round-11 verdict #3: the one dedup-family member with an
-    # ITERATIVE corpus-wide stage (hash-min connected components);
-    # convergence cost tracks duplicate-cluster diameter, which the
-    # replica-heavy upscale makes adversarial. The _SOAK_EXTRA builder
-    # records the per-leg convergence-round count (cc_rounds).
+    # the one dedup-family member with an ITERATIVE corpus-wide stage
+    # (hash-min connected components); convergence cost tracks
+    # duplicate-cluster diameter, which the replica-heavy upscale makes
+    # adversarial. The _SOAK_EXTRA builder records the per-leg
+    # convergence-round count (cc_rounds).
     "q86_dup_clusters",
 )
-# Dropped from the soak by the round-8 timing-action audit (see
-# TIMING_ACTION):
-#   - q103_semdedup: fixed k=8 means cluster size ~ N/8, so the pair
-#     stage is ~N^2/16 dots. Even on the Arrow block pair scorer
-#     (_cluster_pairs) it measures 51 s at x10 and ~100x that at
-#     x100 (timed out past 7 min). That quadratic-at-fixed-capacity
-#     blowup is REAL and is precisely
-#     the degradation SemDeDup's paper configuration has at growing
-#     corpus sizes — the measured argument FOR q149, whose auto-bits
-#     variant keeps cluster capacity tracking the corpus and stays in
-#     the soak. (q103 stays correctness-checked at every SF by the
-#     oracle suites, which execute full results.)
-#   - q135_cdc_dedup was ALSO dropped here ("~17 min at x100") and that
-#     reading is withdrawn as misdiagnosed: it measured two FIXTURE
-#     artifacts, not the operator. (1) the synthetic payload suffix
-#     grew linearly with doc_id, so upscaled corpora (deep/soak ids
-#     reach 10^7-10^8) ballooned to ~MB payloads — total input bytes
-#     grew quadratically with corpus size (now bounded, llm_pipeline
-#     _synth_blob_udf); (2) the single-row-group fixture parquet pinned
-#     the whole map stage to one core (now re-chunked by the
-#     io/tables.py staging layer). With both fixed, honest full-row
-#     timing measures x10 ~10-19 s -> x100 ~69 s (ratio ~3.6) and q135
-#     is back in the soak above.
+# Not in the soak: q103_semdedup. Fixed k=8 means cluster size ~ N/8,
+# so the pair stage is ~N^2/16 dots — quadratic at fixed capacity by
+# configuration, not implementation (51 s at x10, past 7 min at x100).
+# q149's auto-bits variant keeps cluster capacity tracking the corpus
+# and stays in. q103 is still correctness-checked at every SF by the
+# oracle suites.
 
 
 def _soak_semdedup_scaled(spark, sf_dir: str):
@@ -312,7 +373,7 @@ def _soak_dup_clusters(spark, sf_dir: str):
     """q86's exact operator (minhash candidate pairs -> hash-min
     connected components) with the convergence-round count recorded
     per invocation: rounds needed = component diameter, the quantity
-    the replica-heavy upscale stresses (round-11 verdict #3)."""
+    the replica-heavy upscale stresses."""
     from streamprocess_spark.io.tables import load_tables
     from streamprocess_spark.operators import dedup as D
 
@@ -346,39 +407,13 @@ def ensure_soak_dir(sf_dir: str, factor: int = SOAK_FACTOR) -> str:
     table's footer eagerly, so all 10 files must exist, but upscaling
     lineitem x100 would cost ~1 GB of disk for tables the soak never
     scans."""
-    import duckdb
-
-    dst = os.environ.get(
-        "SPARK_GRAFT_SOAK_DIR",
-        os.path.join(tempfile.gettempdir(), f"spark_graft_soak_x{factor}"),
+    return _cached_upscale(
+        sf_dir, "SPARK_GRAFT_SOAK_DIR", f"spark_graft_soak_x{factor}",
+        _deep_cache_key(sf_dir),
+        lambda dst: _write_upscale(dst, sf_dir, {
+            t: _replica_sql(sf_dir, t, factor)
+            for t in ("documents", "embeddings")}),
     )
-    marker = os.path.join(dst, "_DONE")
-    key = _deep_cache_key(sf_dir)
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read() == key:
-                _prestage_tables(dst)
-                return dst
-        shutil.rmtree(dst, ignore_errors=True)
-    _assert_upscale_id_bounds(sf_dir)
-    os.makedirs(dst, exist_ok=True)
-    upscaled = ("documents", "embeddings")
-    for name in os.listdir(sf_dir):
-        if name.endswith(".parquet") \
-                and name.removesuffix(".parquet") not in upscaled:
-            shutil.copy(os.path.join(sf_dir, name), os.path.join(dst, name))
-    con = duckdb.connect()
-    for t in upscaled:
-        src = os.path.join(sf_dir, f"{t}.parquet")
-        sql = _DEEP_SQL[t].format(f=factor).replace("src", repr(src))
-        con.execute(
-            f"COPY ({sql}) TO '{os.path.join(dst, t + '.parquet')}' "
-            f"(FORMAT PARQUET)"
-        )
-    with open(marker, "w") as f:
-        f.write(key)
-    _prestage_tables(dst)
-    return dst
 
 
 def _bench_soak(spark, sf_dir: str) -> dict:
@@ -397,29 +432,13 @@ def _bench_soak(spark, sf_dir: str) -> dict:
         if builder is None:
             continue
         _SOAK_LEG_NOTES.pop(name, None)
-        lo = float("inf")
-        for _ in range(2):   # min-of-2 at x10: the short leg is the
-            t0 = time.perf_counter()           # noise-sensitive one
-            _run_full(builder(spark, lo_dir))
-            lo = min(lo, time.perf_counter() - t0)
-            if lo > _MIN_OF_2_CUTOFF_S:
-                break        # same >30s single-run rule as headline
-        t0 = time.perf_counter()
-        hi_df = builder(spark, hi_dir)
-        _run_full(hi_df)
-        hi = time.perf_counter() - t0
-        # Round-9 verdict #6 (soak variance): the x100 leg was always
-        # single-run on a "minute-scale" assumption, but several legs
-        # finish in seconds (q153 ~3 s) where transient noise is a
-        # large fraction of the reading — q149_auto's recorded ratio
-        # ranged 1.0-7.2x across round-8 runs on unchanged code. Apply
-        # the same >30s single-run rule as everywhere else: a hi leg
-        # that measured under the cutoff gets a second pass, min wins.
-        if hi < _MIN_OF_2_CUTOFF_S:
-            t0 = time.perf_counter()
-            _run_full(builder(spark, hi_dir))
-            hi = min(hi, time.perf_counter() - t0)
-        rows_hi = hi_df.count()                # display-only, untimed
+        # each leg min-of-2 back to back (x10 passes, then x100 passes);
+        # several x100 legs finish in seconds, where one noisy pass
+        # would swing the ratio
+        lo_t = _time_passes([(name, _query_job(spark, builder, lo_dir))])
+        hi_t = _time_passes([(name, _query_job(spark, builder, hi_dir))])
+        lo, hi = lo_t[name].best, hi_t[name].best
+        rows_hi = hi_t[name].outs[-1].count()  # display-only, untimed
         ratio = hi / lo
         out[name] = {
             "lo_sec": round(lo, 4), "hi_sec": round(hi, 4),
@@ -440,43 +459,33 @@ def _bench_soak(spark, sf_dir: str) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# ANN recall at scale (round-7 verdict #6): runtime scaling is soak-
-# measured, but result QUALITY under scale was only tested at sf0.001.
-# recall@5 vs the exact top-k (q48 ground truth) at the bench SF and at
-# a x10 corpus, gated at per-query floors. Floors sit ~15-25% below the
-# measured readings (recall at a fixed corpus is fully deterministic —
-# md5-seeded planes, fixed-point scoring, id tie-breaks — so headroom
-# beyond that only hides quality regressions).
+# ANN recall at scale: recall@5 vs the exact top-k (q48 ground truth)
+# at the bench SF and at a x10 corpus, gated at per-query floors.
+# Recall at a fixed corpus is fully deterministic (md5-seeded planes,
+# fixed-point scoring, id tie-breaks), so the floors sit only ~15-25%
+# below the measured readings; more headroom would hide quality
+# regressions.
 #
-# Round-9 verdict #1: the x10 leg previously reused ensure_deep_dir,
-# whose upscale REPLICATES embedding values — each query's top-5 was
-# its own exact replicas and every correctly-bucketed index read
-# 0.94-1.0, so the leg caught bucketing breakage but never quality
-# degradation. The recall x10 leg now has its own corpus
-# (ensure_recall_dir): replicas carry a deterministic per-(vector,
+# The x10 leg has its own corpus (ensure_recall_dir), not the deep dir:
+# the deep upscale REPLICATES embedding values, so each query's top-5
+# would be its own exact replicas and any correctly-bucketed index
+# would read ~1.0. Here replicas carry a deterministic per-(vector,
 # replica, dim) hash jitter of +-0.24 that lands them at cosine ~0.67
 # to their original — wide enough (48 deg) that sign-LSH planes split
 # them and PQ/IVF quantization error is comparable to the gap, so
-# recovering them exercises the multi-table/nprobe machinery for real
-# (measured: q49 0.88, q73 1.00, q99 0.92, q111 0.46 vs the uniform
-# ~1.0 before). The deep TIMING dir keeps exact replication on
-# purpose: identical values = maximal duplicate multiplicity, the most
-# adversarial shape for the dedup soak's pair stages, and the
-# documents upscale there is what keeps the MinHash workload linear.
+# recovering them exercises the multi-table/nprobe machinery for real.
+# The deep TIMING dir keeps exact replication on purpose: identical
+# values = maximal duplicate multiplicity, the most adversarial shape
+# for the dedup soak's pair stages.
 # ---------------------------------------------------------------------------
 
 ANN_RECALL_FLOORS = {
-    # per-leg floors: sf unchanged from round 8; x10 floors set 15-25%
-    # below the jittered-corpus measurements above
     "sf": {
         "q49_ann_lsh_topk": 0.6,
         "q73_ann_ivf_topk": 0.9,
         "q99_ann_ivf_trained": 0.7,
-        # round-10 verdict #3: the ADC-top-R exact-rescore tail. The
-        # round-11 depth sweep (table at llm_pipeline._PQ_RESCORE)
-        # showed cost flat in R, so R=200 ships: sf leg 0.22 -> 0.82,
-        # deep 0.46 -> 0.90 at ~the pure-ADC runtime; floors re-set
-        # ~15% below the new readings
+        # ADC top-R exact-rescore tail at R=200 (depth sweep at
+        # llm_pipeline._PQ_RESCORE)
         "q111_pq_ann": 0.7,
     },
     "deep": {
@@ -501,27 +510,6 @@ def ensure_recall_dir(sf_dir: str, factor: int = DEEP_FACTOR) -> str:
     from the deep dir (the recall queries only scan embeddings, but
     load_tables opens all footers). The ground-truth pass (exact q48)
     runs on this same dir, so exact and approx see identical bytes."""
-    import duckdb
-
-    dst = os.environ.get(
-        "SPARK_GRAFT_RECALL_DIR",
-        os.path.join(tempfile.gettempdir(),
-                     f"spark_graft_recall_x{factor}"),
-    )
-    marker = os.path.join(dst, "_DONE")
-    key = _deep_cache_key(sf_dir) + f"|jitter={_RECALL_JITTER_AMP}"
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read() == key:
-                _prestage_tables(dst)
-                return dst
-        shutil.rmtree(dst, ignore_errors=True)
-    _assert_upscale_id_bounds(sf_dir)
-    deep = ensure_deep_dir(sf_dir, factor)
-    os.makedirs(dst, exist_ok=True)
-    for name in os.listdir(deep):
-        if name.endswith(".parquet") and name != "embeddings.parquet":
-            shutil.copy(os.path.join(deep, name), os.path.join(dst, name))
     src = os.path.join(sf_dir, "embeddings.parquet")
     amp = _RECALL_JITTER_AMP
     sql = (
@@ -533,21 +521,19 @@ def ensure_recall_dir(sf_dir: str, factor: int = DEEP_FACTOR) -> str:
         f"END AS embedding, label "
         f"FROM {src!r}, range({factor}) r(r)"
     )
-    duckdb.connect().execute(
-        f"COPY ({sql}) TO '{os.path.join(dst, 'embeddings.parquet')}' "
-        f"(FORMAT PARQUET)"
+    return _cached_upscale(
+        sf_dir, "SPARK_GRAFT_RECALL_DIR", f"spark_graft_recall_x{factor}",
+        _deep_cache_key(sf_dir) + f"|jitter={amp}",
+        lambda dst: _write_upscale(
+            dst, ensure_deep_dir(sf_dir, factor), {"embeddings": sql}),
     )
-    with open(marker, "w") as f:
-        f.write(key)
-    _prestage_tables(dst)
-    return dst
 
 
-def _bench_ann_recall(spark, sf_dir: str) -> dict:
+def _bench_ann_recall(spark, sf_dir: str, deep: bool) -> dict:
     from streamprocess_spark.plans import QUERIES
 
     legs = {"sf": sf_dir}
-    if not os.environ.get("SPARK_GRAFT_SKIP_DEEP"):
+    if deep:
         legs["deep"] = ensure_recall_dir(sf_dir)
     out: dict[str, dict] = {}
     for leg, d in legs.items():
@@ -569,11 +555,11 @@ def _bench_ann_recall(spark, sf_dir: str) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# end-to-end corpus-curation DAG (round-7 verdict #5): the pipeline
-# pieces are individually green; this times them as ONE composed job
-# (q150: WARC source -> HTML->text -> dedup -> contamination ->
-# admission -> splits through txlog stage tables) and replays the final
-# admitted-corpus verdict counts in DuckDB.
+# end-to-end corpus-curation DAG: the pipeline pieces are individually
+# green; this times them as ONE composed job (q150: WARC source ->
+# HTML->text -> dedup -> contamination -> admission -> splits through
+# txlog stage tables) and replays the final admitted-corpus verdict
+# counts in DuckDB.
 # ---------------------------------------------------------------------------
 
 
@@ -585,15 +571,16 @@ def _bench_curation(spark, sf_dir: str) -> dict:
     n_docs = duckdb.sql(
         f"SELECT count(*) FROM '{os.path.join(sf_dir, 'documents.parquet')}'"
     ).fetchone()[0]
-    el, rows = float("inf"), None
-    for _ in range(2):     # min-of-2, the headline policy
-        t0 = time.perf_counter()
-        rows = sorted(
+
+    def collect_cells():
+        return sorted(
             (r["verdict"], r["split"], r["n_docs"], r["membership_sum"])
             for r in QUERIES["q150_curation_dag"].builder(spark, sf_dir)
             .collect()
         )
-        el = min(el, time.perf_counter() - t0)
+
+    timed = _time_passes([("q150", collect_cells)], cutoff=None)["q150"]
+    el, rows = timed.best, timed.outs[-1]
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM "
@@ -623,15 +610,25 @@ def _bench_curation(spark, sf_dir: str) -> dict:
     return out
 
 
-N_STREAMS = int(os.environ.get("SPARK_GRAFT_FLAGSHIP_STREAMS", "100"))
-SCALE_STREAMS = int(
-    os.environ.get("SPARK_GRAFT_FLAGSHIP_SCALE_STREAMS", "1000")
-)
+N_STREAMS = 100
+SCALE_STREAMS = 1000
+
+# The flagship legs after the even one, each mapped to the leg whose
+# chunks/s it must stay within 2x of. Of the two checkpoint-profile A/B
+# legs, a session runs the one for the profile it is NOT on:
+# _CKPT_AB_LEGS[session_is_local].
+_CKPT_AB_LEGS = ("local_ckpt", "default_ckpt")
+_FLAGSHIP_LEGS = {
+    "skew": "even", "scale": "even", "rocksdb": "even",
+    # same workload as the in-memory scale leg, provider swapped
+    "scale_rocksdb": "scale",
+    **dict.fromkeys(_CKPT_AB_LEGS, "even"),
+}
 
 
-def _flagship_once(spark, chunks, label: str, n_runs: int = 2) -> dict:
+def _flagship_once(spark, chunks, label: str) -> dict:
     """Enqueue one chunk workload and time the queue -> sessionizer ->
-    result-store pipeline end to end (min of n_runs fresh runs)."""
+    result-store pipeline end to end (min of 2 fresh runs)."""
     from pyspark.sql import functions as F
 
     from streamprocess_spark.io.queue_source import (
@@ -688,13 +685,13 @@ def _flagship_once(spark, chunks, label: str, n_runs: int = 2) -> dict:
         ),
     )
 
-    def _one_run() -> tuple[float, int, int]:
+    def _deliver():
         # Fresh result dir + checkpoint per run; the queue log is
         # append-only (offsets live in the checkpoint), so each run
         # replays the identical enqueued workload from offset zero.
+        # Timed: start to delivery of every expected segment.
         rdir = tempfile.mkdtemp(prefix="spbenchr_")
         ckpt = tempfile.mkdtemp(prefix="spbenchck_")
-        t0 = time.perf_counter()
         query = (
             segments.writeStream.format("result_store")
             .option("path", rdir)
@@ -711,24 +708,29 @@ def _flagship_once(spark, chunks, label: str, n_runs: int = 2) -> dict:
                 )
                 if delivered >= expected_n:
                     break
-                # 50 ms poll (round 13; was 200 ms): the poll cadence is
-                # measurement-completion latency, not pipeline work — a
-                # coarse poll adds up to its full period to every leg's
-                # wall reading. listdir of a few-thousand-file dir is
-                # ~1 ms, so the finer poll costs nothing measurable.
+                # the poll period is measurement-completion latency, not
+                # pipeline work: a coarse poll adds up to its full period
+                # to every reading. listdir of a few-thousand-file dir is
+                # ~1 ms, so the 50 ms poll costs nothing measurable.
                 time.sleep(0.05)
-            el = time.perf_counter() - t0
-            # drain before stop (outside the timed region): stopping
-            # while a 200ms trigger is mid-flight aborts its micro-batch
-            # commit and leaves ERROR lines in an otherwise-clean bench
-            # (round-4 verdict). processAllAvailable() is NOT usable
-            # here — the sessionizer's processing-time idle-timeout (T8)
-            # keeps constructing timeout-only micro-batches, so the
-            # engine never reports noNewData (verified: epochs advance
-            # ~1.6s apart with zero input forever). Instead wait for an
-            # IDLE completed trigger (numInputRows == 0) and stop in the
-            # inter-trigger gap, so no batch is mid-commit when stop()
-            # lands.
+        except BaseException:
+            query.stop()
+            raise
+        return query, rdir, ckpt, delivered
+
+    def _settle(run) -> tuple[int, int]:
+        # drain before stop (outside the timed region): stopping while
+        # a 200ms trigger is mid-flight aborts its micro-batch commit
+        # and leaves ERROR lines in an otherwise-clean bench.
+        # processAllAvailable() is NOT usable here — the sessionizer's
+        # processing-time idle-timeout (T8) keeps constructing
+        # timeout-only micro-batches, so the engine never reports
+        # noNewData (verified: epochs advance ~1.6s apart with zero
+        # input forever). Instead wait for an IDLE completed trigger
+        # (numInputRows == 0) and stop in the inter-trigger gap, so no
+        # batch is mid-commit when stop() lands.
+        query, rdir, ckpt, delivered = run
+        try:
             drain_deadline = time.time() + 60
             batches = 0
             while time.time() < drain_deadline:
@@ -742,21 +744,13 @@ def _flagship_once(spark, chunks, label: str, n_runs: int = 2) -> dict:
             query.stop()
         for d in (rdir, ckpt):
             shutil.rmtree(d, ignore_errors=True)
-        return el, delivered, batches
+        return delivered, batches
 
-    # min of 2, same policy as every other bench section (round-5
-    # verdict #3: the single-run flagship slid 10% round-over-round on
-    # unchanged code — one-off scheduler/GC jitter lands straight in
-    # the round delta unless the section is repeated)
-    el, delivered = float("inf"), 0
-    runs: list[float] = []
-    nb: list[int] = []
-    for _ in range(n_runs):
-        el_i, delivered_i, batches_i = _one_run()
-        runs.append(round(el_i, 2))
-        nb.append(batches_i)
-        if el_i < el:
-            el, delivered = el_i, delivered_i
+    timed = _time_passes([(label, _deliver)], cutoff=None,
+                         settle=_settle)[label]
+    el = timed.best
+    # delivered count of the fastest pass (the first one on a tie)
+    delivered = timed.outs[timed.runs.index(el)][0]
     n_streams = chunks.select("session_id").distinct().count()
     out = {
         "streams": int(n_streams),
@@ -765,12 +759,11 @@ def _flagship_once(spark, chunks, label: str, n_runs: int = 2) -> dict:
         "expected_segments": int(expected_n),
         "value": round(el, 4),
         "chunks_per_sec": round(n_chunks / el, 1),
-        # round-9 verdict #1 (self-adjudicating artifact): every pass's
-        # wall time + its micro-batch count. Two slow passes with
-        # unchanged batch counts = host noise; divergent batch counts
-        # or a one-sided slowdown = investigate.
-        "runs": runs,
-        "nb": nb,
+        # every pass's wall time + its micro-batch count: two slow
+        # passes with unchanged batch counts = host noise; divergent
+        # batch counts or a one-sided slowdown = investigate
+        "runs": [round(r, 2) for r in timed.runs],
+        "nb": [nb for _, nb in timed.outs],
     }
     print(
         f"# flagship[{label}] queue->sessionizer->sink: {el:.3f}s "
@@ -786,6 +779,11 @@ def _bench_flagship(spark, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     from streamprocess_spark.io.tables import load_tables
+    from streamprocess_spark.session import (
+        _LOCAL_CHECKPOINT_CONF,
+        LOCAL_CHECKPOINT_PROFILE_ENV,
+        rocksdb_state_conf,
+    )
     from streamprocess_spark.streaming.sessionizer import (
         DEFAULT_CONFIG,
         chunks_from_events,
@@ -795,13 +793,12 @@ def _bench_flagship(spark, sf_dir: str) -> dict:
     chunks = chunks_from_events(ev, DEFAULT_CONFIG, max_users=N_STREAMS)
     out = _flagship_once(spark, chunks, "even")
 
-    # Skewed leg (round-6 verdict ask #6): real session traffic is
-    # Zipfian, not even. Merge ~30% of the users into one hot session
-    # BEFORE chunks_from_events so the hot stream gets consistent
-    # seq/offset numbering, then run the identical pipeline. Per-key
-    # sessionizer state is bounded (segments emit and are discarded),
-    # so the hot key should cost only its share — gated at within 2x
-    # of the even figure in _regression_gate.
+    # Skewed leg: real session traffic is Zipfian, not even. Merge ~30%
+    # of the users into one hot session BEFORE chunks_from_events so
+    # the hot stream gets consistent seq/offset numbering, then run the
+    # identical pipeline. Per-key sessionizer state is bounded
+    # (segments emit and are discarded), so the hot key should cost
+    # only its share.
     ev_skew = ev.filter(F.col("user_id") < N_STREAMS).withColumn(
         "user_id",
         F.when(F.col("user_id") % 10 < 3, F.lit(0)).otherwise(
@@ -811,15 +808,8 @@ def _bench_flagship(spark, sf_dir: str) -> dict:
     chunks_skew = chunks_from_events(ev_skew, DEFAULT_CONFIG)
     out["skew"] = _flagship_once(spark, chunks_skew, "skew")
 
-    # 1,000-stream leg (round-7 verdict #8): the state-store growth
-    # story — bounded per-key state, T8 reaping — exercised at 10x the
-    # stream count. Round 11: min-of-2 like the other legs — the legs
-    # were single-run when they took minutes, but post-daemon they run
-    # ~7-8 s, and the scale_rocksdb/scale provider-parity gate divides
-    # two single-run readings, whose independent noise produced a
-    # spurious 0.48 ratio flag on an untouched tree (two same-day runs
-    # read 9.6k/9.0k green). Min-of-2 on BOTH sides stabilizes the
-    # ratio for ~15 s of bench time.
+    # 1,000-stream leg: the state-store growth story — bounded per-key
+    # state, T8 reaping — exercised at 10x the stream count.
     chunks_scale = chunks_from_events(
         ev, DEFAULT_CONFIG, max_users=SCALE_STREAMS
     )
@@ -827,91 +817,47 @@ def _bench_flagship(spark, sf_dir: str) -> dict:
         spark, chunks_scale, f"scale-{SCALE_STREAMS}"
     )
 
-    # RocksDB state-store leg (round-9 verdict #5): the even/skew/scale
-    # legs run on the default HDFS-backed in-memory provider, but a
-    # 100 TB deployment with millions of live sessions keeps state in
-    # RocksDBStateStoreProvider (spillable, incremental-checkpointed).
-    # Re-run the even workload with RocksDB enabled: results must be
-    # provider-invariant (segments == expected is asserted by the same
-    # delivery loop) and throughput is gated within 2x of the even leg
-    # in _regression_gate, alongside skew/scale.
-    # Round-13 (round-12 verdict #1): the RocksDB legs run the engine's
-    # RocksDB deployment profile — provider + changelog checkpointing
-    # (see session.rocksdb_state_conf for the measured attribution:
-    # full-snapshot zip+sync dominated every micro-batch commit).
-    # Results are provider-invariant (segments == expected asserted by
-    # the delivery loop, same as every leg).
-    from streamprocess_spark.session import rocksdb_state_conf
-
-    rocks_conf = rocksdb_state_conf()
-    saved_rocks: dict[str, str | None] = {}
-    for ck, cv in rocks_conf.items():
-        try:
-            saved_rocks[ck] = spark.conf.get(ck)
-        except Exception:
-            saved_rocks[ck] = None
-        spark.conf.set(ck, cv)
-    try:
+    # RocksDB legs: a 100 TB deployment with millions of live sessions
+    # keeps state in RocksDBStateStoreProvider, so the even and
+    # 1,000-stream workloads re-run under the engine's RocksDB profile
+    # (provider + changelog checkpointing, see
+    # session.rocksdb_state_conf). Delivered segments must be
+    # provider-invariant.
+    with _spark_conf(spark, rocksdb_state_conf()):
         out["rocksdb"] = _flagship_once(spark, chunks, "rocksdb")
-        # Round-10 verdict #3: run RocksDB where it matters — the
-        # 1,000-stream leg, the shape the provider exists for (millions
-        # of live keys at 100 TB). Segments == expected is asserted by
-        # the same delivery loop; throughput gates within 2x of the
-        # IN-MEMORY scale leg (not the even leg) in _regression_gate.
         out["scale_rocksdb"] = _flagship_once(
             spark, chunks_scale, f"scale-{SCALE_STREAMS}-rocksdb",
         )
-    finally:
-        for ck, cv in saved_rocks.items():
-            if cv is not None:
-                spark.conf.set(ck, cv)
-            else:
-                spark.conf.unset(ck)
 
-    # Local-checkpoint deployment profile A/B (round-10 verdict #4):
-    # the round-10 profile measured ~0.5 s/trigger of local-only
-    # checkpoint overhead (FileContext readlink forks + 4.1 checksum
-    # sidecars, absent libhadoop). The opt-in profile
+    # Local-checkpoint profile A/B: the opt-in profile
     # (session.local_checkpoint_profile_conf, env
-    # SPARK_GRAFT_LOCAL_CHECKPOINT_PROFILE) trades HDFS atomic-rename +
-    # corruption detection for those file ops — right for local/bench
-    # hosts, wrong for HDFS. Record BOTH sides every round: which
-    # profile the session ran (`checkpoint_profile`), plus an even-leg
-    # rerun under the OTHER profile (`local_ckpt` when the session is
-    # default, `default_ckpt` otherwise). Segments are asserted == by
-    # the same delivery loop, so the row is also provider-invariance
-    # evidence.
-    from streamprocess_spark.session import (
-        LOCAL_CHECKPOINT_PROFILE_ENV,
-        _LOCAL_CHECKPOINT_CONF,
-    )
-
+    # SPARK_GRAFT_LOCAL_CHECKPOINT_PROFILE) trades HDFS atomic rename +
+    # corruption detection for fewer checkpoint file ops — right for
+    # local/bench hosts, wrong for HDFS. Record both sides every run:
+    # which profile the session ran (`checkpoint_profile`), plus an
+    # even-leg rerun under the OTHER profile.
     session_is_local = bool(os.environ.get(LOCAL_CHECKPOINT_PROFILE_ENV))
     out["checkpoint_profile"] = "local" if session_is_local else "default"
-    ab_leg = "default_ckpt" if session_is_local else "local_ckpt"
-    saved: dict[str, str | None] = {}
-    for ck, cv in _LOCAL_CHECKPOINT_CONF.items():
-        try:
-            saved[ck] = spark.conf.get(ck)
-        except Exception:
-            saved[ck] = None
-        if session_is_local:
-            spark.conf.unset(ck)  # A/B leg = Spark defaults
-        else:
-            spark.conf.set(ck, cv)
-    try:
+    ab_leg = _CKPT_AB_LEGS[session_is_local]
+    # the A/B leg runs the other profile: Spark defaults (confs unset)
+    # when the session is local, the local profile otherwise
+    ab_conf = (dict.fromkeys(_LOCAL_CHECKPOINT_CONF) if session_is_local
+               else _LOCAL_CHECKPOINT_CONF)
+    with _spark_conf(spark, ab_conf):
         out[ab_leg] = _flagship_once(spark, chunks, ab_leg)
-    finally:
-        for ck, cv in saved.items():
-            if cv is not None:
-                spark.conf.set(ck, cv)
-            else:
-                spark.conf.unset(ck)
     return out
+
+
+def _sf_of(sf_dir: str) -> float | None:
+    """The scale factor named by a trailing `sf<number>` in the dir
+    name (`/data/sf0.1` -> 0.1), else None."""
+    m = re.search(r"sf(\d+(?:\.\d*)?)$", os.path.basename(sf_dir.rstrip("/")))
+    return float(m.group(1)) if m else None
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    skip_deep = bool(os.environ.get("SPARK_GRAFT_SKIP_DEEP"))
     from streamprocess_spark import get_spark
     from streamprocess_spark.plans import QUERIES
     from streamprocess_spark.plans.registry import _ensure_loaded
@@ -921,45 +867,19 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     bench_names = [n for n, s in sorted(QUERIES.items()) if s.bench]
-    timings: dict[str, float] = {}
 
     # warm the JVM + staged events copy once (not counted)
     _run_full(QUERIES[bench_names[0]].builder(spark, sf_dir))
 
-    # min of 2 INTERLEAVED passes (all queries once, then all again):
-    # back-to-back repeats of one query share any transient GC/OS noise
-    # burst, which defeats the min; a full second pass decorrelates the
-    # two samples (round-6 observation: adjacent min-of-2 still showed
-    # a one-off 1.66x on an unchanged query; interleaved re-run did not)
-    best: dict[str, float] = {n: float("inf") for n in bench_names}
-    rows_of: dict[str, int] = {}
-    last_df: dict[str, object] = {}
-    for _pass in range(2):
-        for name in bench_names:
-            if _pass and best[name] > _MIN_OF_2_CUTOFF_S:
-                continue  # >30s runs: warmup noise is a few %, one run
-            t0 = time.perf_counter()
-            last_df[name] = QUERIES[name].builder(spark, sf_dir)
-            _run_full(last_df[name])
-            best[name] = min(best[name], time.perf_counter() - t0)
-    for name in bench_names:  # row counts are display-only, untimed
-        rows_of[name] = last_df[name].count()
-    total = 0.0
-    for name in bench_names:
-        timings[name] = round(best[name], 4)
-        total += best[name]
-        print(f"# {name}: {best[name]:.3f}s ({rows_of[name]} rows)",
-              file=sys.stderr)
-
+    best = _bench_queries(spark, bench_names, sf_dir)
     result = {
         "metric": "headline_queries_total_runtime",
-        "value": round(total, 4),
+        "value": round(sum(best.values()), 4),
         "unit": "sec",
         "timing_action": TIMING_ACTION,
-        "queries": timings,
+        "queries": {n: round(t, 4) for n, t in best.items()},
+        "sf": _sf_of(sf_dir),
     }
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    result["sf"] = float(sf) if sf else None
 
     # streaming throughput: full events replay through the watermarked
     # tumbling-window aggregation (micro-batched availableNow run to a
@@ -968,36 +888,26 @@ def main() -> None:
     if "stream_tumbling_window" in QUERIES:
         import duckdb
 
+        from streamprocess_spark.streaming import core as _score
+
         n_events = duckdb.sql(
             f"SELECT count(*) FROM '{os.path.join(sf_dir, 'events.parquet')}'"
         ).fetchone()[0]
-        # min of 2, same policy as the headline loop: each run is a
-        # fresh availableNow stream + checkpoint, so a one-off fs/GC
-        # stall otherwise lands directly in the round-over-round delta
-        from streamprocess_spark.streaming import core as _score
-
-        el, out_rows = float("inf"), 0
-        s_runs: list[float] = []
-        s_nb: list[int] = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            out_rows = (
-                QUERIES["stream_tumbling_window"].builder(spark, sf_dir).count()
-            )
-            el_i = time.perf_counter() - t0
-            s_runs.append(round(el_i, 2))
-            s_nb.append(int(_score.LAST_RUN.get("batches", 0)))
-            el = min(el, el_i)
+        timed = _time_passes(
+            [("replay", lambda: QUERIES["stream_tumbling_window"]
+              .builder(spark, sf_dir).count())],
+            cutoff=None,
+            settle=lambda rows: (rows, int(_score.LAST_RUN.get("batches", 0))),
+        )["replay"]
+        el = timed.best
         result_stream = {
             "input_rows": int(n_events),
-            "output_rows": int(out_rows),
+            "output_rows": int(timed.outs[-1][0]),
             "value": round(el, 4),
             "rows_per_sec": round(n_events / el, 1),
-            # both pass timings + per-pass micro-batch counts (round-9
-            # verdict #1): the r09 flag on this very metric took a full
-            # independent re-measure to adjudicate as host noise
-            "runs": s_runs,
-            "nb": s_nb,
+            # every pass's timing + micro-batch count, as in flagship
+            "runs": [round(r, 2) for r in timed.runs],
+            "nb": [nb for _, nb in timed.outs],
         }
         print(
             f"# streaming replay: {el:.3f}s "
@@ -1007,48 +917,27 @@ def main() -> None:
     else:
         result_stream = None
 
-    # deep runs BEFORE the flagship streaming section (round-4 lesson:
-    # deep inherited the flagship's JVM heap/GC state and, single-run,
-    # recorded a phantom 1.9x "regression" on unchanged code)
-    if not os.environ.get("SPARK_GRAFT_SKIP_DEEP"):
+    # deep runs BEFORE the flagship streaming section: run after it, deep
+    # inherits the flagship's JVM heap/GC state (a phantom 1.9x
+    # "regression" on unchanged code)
+    if not skip_deep:
         t0 = time.perf_counter()
         deep_dir = ensure_deep_dir(sf_dir)
         gen_s = time.perf_counter() - t0
         print(f"# deep x{DEEP_FACTOR} data ready in {gen_s:.1f}s", file=sys.stderr)
-        deep_timings: dict[str, float] = {}
-        # min of 2 interleaved passes, same rationale as the headline loop
-        deep_best: dict[str, float] = {n: float("inf") for n in bench_names}
-        deep_rows: dict[str, int] = {}
-        deep_df: dict[str, object] = {}
-        for _pass in range(2):
-            for name in bench_names:
-                if _pass and deep_best[name] > _MIN_OF_2_CUTOFF_S:
-                    continue  # same >30s single-run rule as headline
-                t0 = time.perf_counter()
-                deep_df[name] = QUERIES[name].builder(spark, deep_dir)
-                _run_full(deep_df[name])
-                deep_best[name] = min(
-                    deep_best[name], time.perf_counter() - t0
-                )
-        for name in bench_names:  # row counts are display-only, untimed
-            deep_rows[name] = deep_df[name].count()
-        deep_total = 0.0
-        for name in bench_names:
-            deep_timings[name] = round(deep_best[name], 4)
-            deep_total += deep_best[name]
-            print(f"# deep {name}: {deep_best[name]:.3f}s "
-                  f"({deep_rows[name]} rows)", file=sys.stderr)
+        deep_best = _bench_queries(spark, bench_names, deep_dir, "deep ")
         result["deep"] = {
             "factor": DEEP_FACTOR,
-            "value": round(deep_total, 4),
-            "queries": deep_timings,
+            "value": round(sum(deep_best.values()), 4),
+            "queries": {n: round(t, 4) for n, t in deep_best.items()},
         }
 
-    # ANN result quality at scale (round-7 verdict #6)
+    # ANN result quality at scale
     if not os.environ.get("SPARK_GRAFT_SKIP_ANN_RECALL"):
-        result["ann_recall"] = _bench_ann_recall(spark, sf_dir)
+        result["ann_recall"] = _bench_ann_recall(
+            spark, sf_dir, deep=not skip_deep)
 
-    # end-to-end corpus-curation DAG (round-7 verdict #5)
+    # end-to-end corpus-curation DAG
     if not os.environ.get("SPARK_GRAFT_SKIP_CURATION"):
         result["curation"] = _bench_curation(spark, sf_dir)
 
@@ -1075,68 +964,51 @@ def main() -> None:
         result["streaming"] = result_stream
 
     result["regression_gate"] = _regression_gate(result)
-    # Targeted noise-rejection retry (round-6 observation: this host
-    # shows run-level noise bursts — unrelated, unchanged queries
-    # inflate 1.5-2x together in one bench process and measure clean in
-    # the next). A per-query flag gets up to two fresh re-measurements;
-    # the min stands. A REAL regression re-measures as slow and keeps
-    # its flag; a burst artifact clears. Throughput sections are not
+    # Targeted noise-rejection retry: this host shows run-level noise
+    # bursts (unrelated, unchanged queries inflate 1.5-2x together in
+    # one bench process and measure clean in the next). Each flagged
+    # query gets two fresh re-measurements, interleaved across the
+    # flagged set, and the min stands: a REAL regression re-measures as
+    # slow and keeps its flag, a burst artifact clears. Each pass also
+    # times one fixed cheap REFERENCE query; if it reads slow too, the
+    # flag window was host weather (recorded under retried["_ref"],
+    # never used in a gate decision). Throughput sections are not
     # retried (a full flagship/streaming rerun is not noise-shaped).
     per_query = [k for k in result["regression_gate"]["flagged"]
                  if not k.startswith(("flagship", "streaming:", "soak:",
                                       "curation:", "ann_recall:"))]
     retried: dict[str, dict] = {}
     if per_query:
-        deep_dir_r = None if os.environ.get("SPARK_GRAFT_SKIP_DEEP") \
-            else ensure_deep_dir(sf_dir)
-        # Round-13 (round-12 verdict #6, additive-only): retries are
-        # INTERLEAVED — one pass over every flagged query, then a
-        # second — instead of 2 back-to-back runs per query, so a
-        # transient host burst cannot poison both samples of one query
-        # (the same rationale as the headline loop's interleaving).
-        # Each pass additionally times one fixed cheap REFERENCE query
-        # (untouched code, sub-second): if the reference also reads
-        # slow, the flag window was host weather — recorded under
-        # retried["_ref"], never used in any gate decision.
-        resolved: list[tuple[str, str, str, str]] = []
+        deep_dir_r = None if skip_deep else ensure_deep_dir(sf_dir)
+        resolved: list[tuple[str, dict, str, str]] = []
         for key in per_query:
             if key.startswith("deep:"):
-                section, q, tdir = "deep", key[5:], deep_dir_r
+                target, q = result["deep"]["queries"], key[5:]
+                tdir = deep_dir_r
             else:
-                section, q, tdir = "queries", key, sf_dir
-            if tdir is None:
-                continue
-            resolved.append((key, section, q, tdir))
-        firsts: dict[str, float] = {}
-        bests: dict[str, float] = {}
-        for key, section, q, tdir in resolved:
-            target = result[section]["queries"] if section == "deep" \
-                else result["queries"]
-            firsts[key] = target[q]
-            bests[key] = target[q]
+                target, q, tdir = result["queries"], key, sf_dir
+            if tdir is not None:
+                resolved.append((key, target, q, tdir))
         ref_name = "q55_ocr_lines" if "q55_ocr_lines" in QUERIES \
             else bench_names[0]
-        ref_runs: list[float] = []
-        for _pass in range(2):
-            for key, section, q, tdir in resolved:
-                t0 = time.perf_counter()
-                _run_full(QUERIES[q].builder(spark, tdir))
-                bests[key] = min(bests[key], time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            _run_full(QUERIES[ref_name].builder(spark, sf_dir))
-            ref_runs.append(round(time.perf_counter() - t0, 4))
-        for key, section, q, tdir in resolved:
-            target = result[section]["queries"] if section == "deep" \
-                else result["queries"]
-            best = bests[key]
-            print(f"# gate retry {key}: {firsts[key]:.3f}s -> {best:.3f}s",
+        timed = _time_passes(
+            [(key, _query_job(spark, QUERIES[q].builder, tdir))
+             for key, _, q, tdir in resolved]
+            + [("_ref", _query_job(spark, QUERIES[ref_name].builder,
+                                   sf_dir))],
+            cutoff=None,
+        )
+        for key, target, q, _ in resolved:
+            first = target[q]
+            best = min(first, timed[key].best)
+            print(f"# gate retry {key}: {first:.3f}s -> {best:.3f}s",
                   file=sys.stderr)
-            # round-6 verdict #1: the retry must not erase the flagged
-            # measurement — record both so a flagged-then-cleared query
-            # is machine-readable round-over-round
-            retried[key] = {"first": firsts[key], "retry": round(best, 4)}
+            # keep the flagged measurement next to the retry, so a
+            # flagged-then-cleared query stays machine-readable
+            retried[key] = {"first": first, "retry": round(best, 4)}
             target[q] = round(best, 4)
-        retried["_ref"] = {"query": ref_name, "runs": ref_runs}
+        retried["_ref"] = {"query": ref_name,
+                           "runs": [round(r, 4) for r in timed["_ref"].runs]}
         if "deep" in result:
             result["deep"]["value"] = round(
                 sum(result["deep"]["queries"].values()), 4)
@@ -1144,15 +1016,26 @@ def main() -> None:
         result["regression_gate"] = _regression_gate(result)
     result["regression_gate"]["retried"] = retried
     print(json.dumps(result))
-    # Round-9 verdict #4: the driver archives only the LAST 2000 chars
-    # of stdout, and the full result line above exceeds that once the
-    # flagship/soak/recall sections are present — BENCH_r08 lost its
-    # headline number to tail truncation. Emit a compact summary as the
-    # FINAL line: small enough (~1.2 KB) to always sit inside the tail,
-    # and self-sufficient for _regression_gate's history windows
-    # (timing_action + per-query + deep timings, the three throughput
-    # medians, soak ratios), so a tail-parsed round still feeds every
-    # gate next round.
+    print(json.dumps(_compact(result)))
+    spark.stop()
+
+
+def _compact(result: dict) -> dict:
+    """The final stdout line. Only the last 2000 chars of stdout are
+    archived, and the full result line exceeds that once the
+    flagship/soak/recall sections are present, so this summary must
+    always fit inside the tail. It is self-sufficient for
+    _regression_gate's history windows (timing_action, sf, per-query
+    and deep timings, the three throughput medians, soak ratios), so a
+    tail-parsed run still feeds every gate next time.
+
+    Every throughput section carries ALL pass timings ("runs",
+    seconds) and per-pass micro-batch counts ("nb"), so a flag can be
+    adjudicated from the tail alone. Byte-budget key map: leg "cps" =
+    chunks_per_sec (full key kept at the top flagship level, where the
+    gate's history reader needs it); soak queries flatten to
+    {qNN: ratio}; ann_recall keys are the queries' numeric prefixes
+    (q49/q73/q99/q111) with values [reading, floor]."""
     compact = {
         k: result[k]
         for k in ("metric", "value", "unit", "sf", "timing_action",
@@ -1161,16 +1044,7 @@ def main() -> None:
     }
     if "deep" in result:
         compact["deep"] = result["deep"]
-    # Round-10 verdict #1 (self-adjudicating artifact): every
-    # throughput section carries ALL pass timings ("runs", seconds) and
-    # per-pass micro-batch counts ("nb") — two slow passes + unchanged
-    # batch counts adjudicate a flag as host noise from the tail alone;
-    # divergent batch counts or a one-sided slowdown say investigate.
-    # Byte-budget key map (the 2000-char tail is hard): leg
-    # "cps" = chunks_per_sec (full key kept at the top flagship level,
-    # where the gate's history reader needs it); soak queries flatten
-    # to {name: ratio}; ann_recall keys are the queries' numeric
-    # prefixes (q49/q73/q99/q111) with values [reading, floor].
+
     def _tp(sec: dict, cps_key: str = "chunks_per_sec") -> dict:
         keep = {}
         if sec.get("chunks_per_sec") is not None:
@@ -1178,8 +1052,8 @@ def main() -> None:
         if sec.get("rows_per_sec") is not None:
             keep["rows_per_sec"] = sec["rows_per_sec"]
         # per-pass seconds at 1 decimal in the tail (byte budget; the
-        # full line above keeps 2) — adjudication needs the cold/warm
-        # split and cross-pass shape, not centiseconds
+        # full line keeps 2) — adjudication needs the cold/warm split
+        # and cross-pass shape, not centiseconds
         if sec.get("runs") is not None:
             keep["runs"] = [round(r, 1) for r in sec["runs"]]
         if sec.get("nb") is not None:
@@ -1189,18 +1063,15 @@ def main() -> None:
     fs = result.get("flagship") or {}
     if fs:
         compact["flagship"] = _tp(fs)
-        for leg in ("skew", "scale", "rocksdb", "scale_rocksdb"):
-            if fs.get(leg):
-                compact["flagship"][leg] = _tp(fs[leg], cps_key="cps")
-        # checkpoint-profile A/B: the tail byte budget only fits the
-        # headline figure — the leg NAME says which side the session
-        # ran (local_ckpt present = session on Spark defaults and vice
-        # versa); runs/nb live in the full line, and the within-round
-        # 2x gate vs the even leg flags into `flagged` regardless
-        for leg in ("local_ckpt", "default_ckpt"):
-            if fs.get(leg):
-                compact["flagship"][leg] = {
-                    "cps": fs[leg].get("chunks_per_sec")}
+        for leg in _FLAGSHIP_LEGS:
+            if not fs.get(leg):
+                continue
+            # the checkpoint-profile A/B leg keeps only its headline
+            # figure (byte budget); its NAME says which side the
+            # session ran, and runs/nb live in the full line
+            compact["flagship"][leg] = (
+                {"cps": fs[leg].get("chunks_per_sec")}
+                if leg in _CKPT_AB_LEGS else _tp(fs[leg], cps_key="cps"))
     if result.get("streaming"):
         compact["streaming"] = _tp(result["streaming"])
     if result.get("curation"):
@@ -1208,47 +1079,40 @@ def main() -> None:
             "docs_per_sec": result["curation"].get("docs_per_sec"),
             "verified": result["curation"].get("verified")}
     if result.get("soak"):
-        # short `qNN` keys (round 12: the q86 leg pushed the worst-case
-        # tail over budget on full names; ann_recall already uses the
-        # same prefix scheme). _regression_gate resolves history under
-        # either key form.
+        # short `qNN` keys keep the worst-case tail in budget;
+        # _regression_gate resolves history under either key form
         compact["soak"] = {"queries": {
             q.split("_")[0]: s.get("ratio")
             for q, s in (result["soak"].get("queries") or {}).items()}}
-    # recall evidence (round-9 verdict: the r09 tail could not prove the
-    # floors were met): per leg, {query-prefix: [reading, floor]}
     if result.get("ann_recall"):
         compact["ann_recall"] = {
             leg: {q.split("_")[0]: [s["recall_at_5"], s["floor"]]
                   for q, s in queries.items()}
             for leg, queries in result["ann_recall"].items()}
     flags = sorted(result["regression_gate"]["flagged"])
-    # cap so a heavily-flagged round cannot push the headline out of
-    # the tail; the full flag dict is in the (truncatable) full line
-    # (round 11: 4 -> 3 to keep the worst-case tail under budget with
-    # the checkpoint-profile A/B leg added; n_flagged still reports
-    # the true count)
+    # cap so a heavily-flagged run cannot push the headline out of the
+    # tail; the full flag dict is in the (truncatable) full line and
+    # n_flagged reports the true count
     compact["flagged"] = flags[:3]
     if len(flags) > 3:
         compact["n_flagged"] = len(flags)
-    print(json.dumps(compact))
-    spark.stop()
+    return compact
 
 
 _GATE_RATIO = 1.5
 
 
 def _regression_gate(result: dict, here: str | None = None) -> dict:
-    """Compare this run's per-query timings against the most recent
-    committed BENCH_r*.json so a round-over-round regression can never
-    land silently again (round-4 verdict ask #8). Queries slower than
-    _GATE_RATIO x the prior round are flagged in the output JSON and
-    shouted to stderr; absolute-floor 0.5s ignores warmup jitter.
-    Throughput sections gate against the median of the last <=3 rounds
-    (see the inline rationale). `here` overrides the history directory
-    (tests only)."""
+    """Compare this run against the committed BENCH_r*.json history at
+    the same sf, so a round-over-round regression cannot land silently.
+    Per-query timings slower than _GATE_RATIO x the median of the last
+    <=3 methodology-matched rounds are flagged in the output JSON and
+    shouted to stderr; an absolute floor of 0.5 s ignores warmup
+    jitter. Throughput sections gate against the median of the last
+    <=3 rounds; soak ratios, flagship leg ratios, segment delivery,
+    curation replay and ANN recall floors are absolute gates. `here`
+    overrides the history directory (tests only)."""
     import glob as _glob
-    import re
     import statistics
 
     if here is None:
@@ -1273,24 +1137,26 @@ def _regression_gate(result: dict, here: str | None = None) -> dict:
     if not rounds:
         return {"baseline_round": None, "threshold": _GATE_RATIO,
                 "flagged": {}}
-    prior_n, prior = rounds[-1]
+    # Only rounds at this run's scale factor are history: timings and
+    # throughput at another sf measure a different workload (an sf0.001
+    # streaming replay reads ~0.02x an sf0.1 one). With none left, only
+    # the absolute gates below apply.
+    rounds = [(n, r) for n, r in rounds if r.get("sf") == result.get("sf")]
+    prior_n = rounds[-1][0] if rounds else None
     # Per-query timings compare ONLY against rounds measured with the
-    # same timing action (round-8 audit: the `.count()`-era numbers
-    # under-measure any query whose count plan prunes work, so a
-    # cross-methodology "regression" would be an artifact). Throughput
-    # sections (flagship/streaming/curation) are wall-clock pipelines
-    # unaffected by the query timing action and keep the full history.
+    # same timing action: `.count()`-era numbers under-measure any query
+    # whose count plan prunes work, so a cross-methodology "regression"
+    # would be an artifact. Throughput sections (flagship/streaming/
+    # curation) are wall-clock pipelines unaffected by the query timing
+    # action and keep the full history.
     q_rounds = [
         (n, r) for n, r in rounds
         if r.get("timing_action") == result.get("timing_action")
     ]
     flagged: dict[str, dict] = {}
-    # Per-query timings gate against the MEDIAN of the last <=3 rounds
-    # (round-7 verdict #4): round 7 measured a uniform 7-47% host-state
-    # drift on unchanged plans that brought q1 within noise of the
-    # single-prior-round 1.5x threshold — the same variance class that
-    # already moved the throughput sections to a median window. The
-    # retry+`retried` protocol downstream is unchanged.
+    # Per-query timings gate against the MEDIAN of the last <=3 rounds:
+    # a uniform 7-47% host-state drift on unchanged plans has brought a
+    # query within noise of a single-prior-round 1.5x threshold.
     for section in ("queries", "deep"):
         now = result.get(section) or {}
         if section == "deep":
@@ -1313,17 +1179,14 @@ def _regression_gate(result: dict, here: str | None = None) -> dict:
                                 "ratio": round(t / t0, 2)}
                 print(f"# REGRESSION {key}: median {t0:.3f}s -> {t:.3f}s "
                       f"({t / t0:.2f}x)", file=sys.stderr)
-    # throughput sections (round-5 verdict #3): bigger is better, so a
-    # regression is now < baseline / _GATE_RATIO. Baseline is the
-    # MEDIAN of the last <=3 rounds carrying the metric, not the single
-    # prior round: these are wall-clock streaming figures with large
-    # host-state variance (recorded history 1173 -> 1055 -> 1993
-    # chunks/s on unchanged pipeline code), and gating against one
-    # lucky round ratchets the bar to its noise peak — a healthy run
-    # above the recorded median would flag as a phantom regression.
-    # (Round 8: per-query timings moved to the same median window —
-    # see the per-query loop above; the retry policy still handles
-    # one-off bursts on top.)
+    # throughput sections: bigger is better, so a regression is
+    # < baseline / _GATE_RATIO. Baseline is the MEDIAN of the last <=3
+    # rounds carrying the metric, not the single prior round: these are
+    # wall-clock streaming figures with large host-state variance
+    # (recorded history 1173 -> 1055 -> 1993 chunks/s on unchanged
+    # pipeline code), and gating against one lucky round ratchets the
+    # bar to its noise peak — a healthy run above the recorded median
+    # would flag as a phantom regression.
     for section, metric in (("flagship", "chunks_per_sec"),
                             ("streaming", "rows_per_sec"),
                             ("curation", "docs_per_sec")):
@@ -1347,30 +1210,30 @@ def _regression_gate(result: dict, here: str | None = None) -> dict:
     # scale-soak gate: the threshold is absolute (a super-linear
     # blowup is a scale bug whatever last round measured), but the
     # VALUE it is applied to is the median of this run's ratio plus the
-    # last <=3 methodology-matched rounds' ratios (round-9 verdict #6:
-    # minute-scale single-pass legs showed 1.0-7.2x host-state spread
-    # on unchanged code — one noisy reading must not flag, while a
+    # last <=3 methodology-matched rounds' ratios (minute-scale
+    # single-pass legs have shown 1.0-7.2x host-state spread on
+    # unchanged code — one noisy reading must not flag, while a
     # genuinely quadratic operator pushes the median over the bar
     # within a round of landing). No history => the current ratio IS
     # the median, so a first-round blowup still flags. Stated cost of
     # the median window: a super-linear regression landing after a
     # green history ([4,4,4,20] -> median 4) is not median-flagged for
     # 1-2 rounds — so a CATASTROPHIC current-round reading (> 2x the
-    # gate on its own) flags immediately, median notwithstanding
-    # (round-9 advice): genuine quadratics blow far past 2x the gate,
-    # host noise historically stays under it (recorded spread 1.0-7.2x
-    # vs the 30x hard bar).
+    # gate on its own) flags immediately, median notwithstanding:
+    # genuine quadratics blow far past 2x the gate, host noise
+    # historically stays under it (recorded spread 1.0-7.2x vs the 30x
+    # hard bar).
     for q, s in ((result.get("soak") or {}).get("queries") or {}).items():
         hist = []
         for _, r in q_rounds[-3:]:
             sq = (r.get("soak") or {}).get("queries") or {}
-            # history keys may be full query names (rounds <=11) or the
-            # compact-tail short `qNN` prefixes (round 12+)
+            # history keys may be full query names (older full-line
+            # artifacts) or the compact-tail short `qNN` prefixes
             ref = sq.get(q)
             if ref is None:
                 ref = sq.get(q.split("_")[0])
             # history may be the full dict (old full-line artifacts) or
-            # the flattened compact-tail float (round 10+)
+            # the flattened compact-tail float
             if isinstance(ref, dict):
                 ref = ref.get("ratio")
             if ref is not None:
@@ -1395,25 +1258,14 @@ def _regression_gate(result: dict, here: str | None = None) -> dict:
             print(f"# SCALE REGRESSION {key}: x10 {s['lo_sec']}s -> "
                   f"x100 {s['hi_sec']}s (median {med:.1f}x of "
                   f"{window} > {SOAK_MAX_RATIO}x)", file=sys.stderr)
-    # skew + scale + rocksdb gates: the hot-session leg, the
-    # 1,000-stream leg and the RocksDB-provider leg must each stay
-    # within 2x of the even leg's throughput (bounded per-key state —
-    # round-6 ask #6, round-7 ask #8; provider parity — round-9 #5)
+    # flagship leg gates: each leg must stay within 2x of its base leg's
+    # throughput (bounded per-key state for skew/scale, provider and
+    # checkpoint-profile parity for the rest)
     fs = result.get("flagship") or {}
-    even_v = fs.get("chunks_per_sec")
-    # scale_rocksdb compares against the IN-MEMORY scale leg (same
-    # workload, provider swapped — round-10 verdict #3), the others
-    # against the even leg
-    scale_v = (fs.get("scale") or {}).get("chunks_per_sec")
-    for leg, base_v, base_name in (
-            ("skew", even_v, "even"), ("scale", even_v, "even"),
-            ("rocksdb", even_v, "even"),
-            ("scale_rocksdb", scale_v, "scale"),
-            # checkpoint-profile A/B (round-10 verdict #4): whichever
-            # side the session did NOT run on — results are asserted
-            # identical by the delivery loop; throughput within 2x
-            ("local_ckpt", even_v, "even"),
-            ("default_ckpt", even_v, "even")):
+    base_of = {"even": fs.get("chunks_per_sec"),
+               "scale": (fs.get("scale") or {}).get("chunks_per_sec")}
+    for leg, base_name in _FLAGSHIP_LEGS.items():
+        base_v = base_of[base_name]
         leg_v = (fs.get(leg) or {}).get("chunks_per_sec")
         # `is not None`, not truthiness: a leg that ran and delivered 0
         # chunks/s is a total collapse and must flag (the same falsy-0
@@ -1425,14 +1277,12 @@ def _regression_gate(result: dict, here: str | None = None) -> dict:
                 "ratio": round(leg_v / base_v, 2)}
             print(f"# {leg.upper()} REGRESSION flagship: {base_name} "
                   f"{base_v} -> {leg} {leg_v} chunks/s", file=sys.stderr)
-    # segment-delivery invariant (round-9 #5): every flagship leg must
-    # deliver exactly the batch-sessionizer's expected segment set —
-    # a short count is dropped results (e.g. a state-store provider
-    # changing semantics), not a throughput matter
+    # segment-delivery invariant: every flagship leg must deliver
+    # exactly the batch-sessionizer's expected segment set — a short
+    # count is dropped results (e.g. a state-store provider changing
+    # semantics), not a throughput matter
     for key_name, sec in (("flagship", fs),) + tuple(
-            (f"flagship_{leg}", fs.get(leg) or {})
-            for leg in ("skew", "scale", "rocksdb", "scale_rocksdb",
-                        "local_ckpt", "default_ckpt")):
+            (f"flagship_{leg}", fs.get(leg) or {}) for leg in _FLAGSHIP_LEGS):
         exp = sec.get("expected_segments")
         got = sec.get("segments")
         if exp is not None and got != exp:

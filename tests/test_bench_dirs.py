@@ -97,56 +97,71 @@ def test_recall_floors_match_bench_legs():
 
 
 def test_compact_tail_line_is_small_enough():
-    """Round-9 verdict #4: the final stdout line must always fit the
-    driver's 2000-char tail. Reconstruct a worst-case compact dict from
-    the real bench query registry and assert the serialized size."""
+    """The final stdout line must always fit the 2000-char archived
+    tail. Build a worst-case FULL result (every section present, the
+    real bench query registry, widest realistic figures, a heavily
+    flagged gate) and pass it through bench._compact, so growth in the
+    real tail code fails here."""
     from streamprocess_spark.plans.registry import QUERIES, _ensure_loaded
+
+    from bench import (
+        _FLAGSHIP_LEGS,
+        ANN_RECALL_FLOORS,
+        SOAK_QUERIES,
+        _compact,
+    )
 
     _ensure_loaded()
     bench_names = [n for n, s in QUERIES.items() if s.bench]
-    from bench import SOAK_QUERIES
 
     # worst-case realistic widths: per-query timings are gate-bounded
-    # far below 100 s; flagship runs below 1000 s; micro-batch counts
-    # below 10k (200 ms triggers x 300 s timeout); the flagged list is
-    # capped at 4 names + an overflow count by bench.py itself
-    # runs are tail-rounded to 1 decimal by bench._tp; flagship-leg
-    # micro-batch counts are availableNow delivery passes (observed
-    # 1-2; 3 digits is already x500 headroom) — the 200ms-trigger
-    # 4-digit bound applies to the streaming section only
-    def leg(n_runs):
-        return {"cps": 99999.9, "runs": [999.9] * n_runs,
-                "nb": [999] * n_runs}
+    # far below 100 s; flagship runs below 1000 s; flagship-leg
+    # micro-batch counts are delivery passes (observed 1-2; 3 digits is
+    # already x500 headroom), the streaming replay's below 10k (200 ms
+    # triggers x 300 s timeout)
+    def leg():
+        return {"streams": 1000, "input_chunks": 9999999,
+                "segments": 999999, "expected_segments": 999999,
+                "value": 999.9999, "chunks_per_sec": 99999.9,
+                "runs": [999.99, 999.99], "nb": [999, 999]}
 
-    compact = {
+    flagship = leg()
+    flagship["checkpoint_profile"] = "default"
+    # a session runs exactly one of the two checkpoint-profile A/B legs
+    legs = list(_FLAGSHIP_LEGS)[:-1]
+    for name in legs:
+        flagship[name] = leg()
+    result = {
         "metric": "headline_queries_total_runtime",
         "value": 9999.9999,
         "unit": "sec",
-        "sf": 0.1,
         "timing_action": "noop_write",
         "queries": {n: 99.9999 for n in bench_names},
-        # round-10 verdict #1: every throughput section now carries all
-        # pass timings ("runs") + per-pass micro-batch counts ("nb"),
-        # and the recall floors/readings ride along
+        "sf": 0.001,
         "deep": {"factor": 10, "value": 999.9999,
                  "queries": {n: 99.9999 for n in bench_names}},
-        "flagship": {"chunks_per_sec": 99999.9, "runs": [999.9, 999.9],
-                     "nb": [999, 999],
-                     "skew": leg(2), "scale": leg(2),
-                     "rocksdb": leg(2), "scale_rocksdb": leg(2),
-                     "local_ckpt": {"cps": 99999.9}},
-        "streaming": {"rows_per_sec": 999999.9, "runs": [999.9, 999.9],
-                      "nb": [999, 999]},
-        "curation": {"docs_per_sec": 99999.9, "verified": True},
-        # round 12: the compact tail keys soak legs by `qNN` prefix
-        # (bench.py shortens; _regression_gate resolves either form)
-        "soak": {"queries": {q.split("_")[0]: 123.45
-                             for q in SOAK_QUERIES}},
         "ann_recall": {
-            leg_: {q: [0.9999, 0.99]
-                   for q in ("q49", "q73", "q99", "q111")}
-            for leg_ in ("sf", "deep")},
-        "flagged": [f"deep:q{i}_some_flagged_query" for i in range(3)],
-        "n_flagged": 99,
+            leg_: {q: {"recall_at_5": 0.9999, "floor": 0.99}
+                   for q in floors}
+            for leg_, floors in ANN_RECALL_FLOORS.items()},
+        "curation": {"n_docs": 9999999, "cells": 99,
+                     "admitted_docs": 9999999, "value": 999.9999,
+                     "docs_per_sec": 99999.9, "verified": True},
+        "flagship": flagship,
+        "soak": {"factor_lo": 10, "factor_hi": 100, "max_ratio": 15.0,
+                 "queries": {q: {"lo_sec": 999.9999, "hi_sec": 999.9999,
+                                 "rows_hi": 9999999, "ratio": 123.45,
+                                 "cc_rounds": [99, 99, 99, 99]}
+                             for q in SOAK_QUERIES}},
+        "streaming": {"input_rows": 9999999, "output_rows": 999999,
+                      "value": 999.9999, "rows_per_sec": 999999.9,
+                      "runs": [999.99, 999.99], "nb": [9999, 9999]},
+        "regression_gate": {
+            "flagged": {f"deep:q{i}_some_flagged_query": {}
+                        for i in range(99)},
+            "retried": {}},
     }
+    compact = _compact(result)
+    assert set(legs) <= set(compact["flagship"])
+    assert compact["n_flagged"] == 99
     assert len(json.dumps(compact)) < 1900, len(json.dumps(compact))

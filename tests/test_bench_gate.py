@@ -378,3 +378,29 @@ def test_flagship_leg_zero_throughput_flags(tmp_path):
     absent = {"flagship": {"chunks_per_sec": 1000.0}}
     out2 = _regression_gate(absent, here=str(tmp_path))
     assert not any(k.startswith("flagship_") for k in out2["flagged"])
+
+
+def test_gate_history_is_sf_matched(tmp_path):
+    """History at another scale factor measures a different workload
+    (an sf0.001 streaming replay reads ~0.02x an sf0.1 one), so an
+    sf0.001 run against sf0.1 history gets no history flag; the same
+    run at sf0.1 does. The absolute gates still apply at any sf."""
+    for n in (1, 2, 3):
+        _write_round(tmp_path, n, _base_round(
+            sf=0.1, timing_action="noop_write"))
+    slow = {"queries": {"q1": 9.0}, "timing_action": "noop_write",
+            "flagship": {"chunks_per_sec": 10.0},
+            "streaming": {"rows_per_sec": 1000.0}}
+    out = _regression_gate(dict(slow, sf=0.001), here=str(tmp_path))
+    assert out["flagged"] == {}
+    assert out["baseline_round"] is None
+    assert out["query_history_rounds"] == []
+    out = _regression_gate(dict(slow, sf=0.1), here=str(tmp_path))
+    assert set(out["flagged"]) == {
+        "q1", "flagship:chunks_per_sec", "streaming:rows_per_sec"}
+    assert out["baseline_round"] == 3
+    short = {"sf": 0.001, "flagship": {"chunks_per_sec": 10.0,
+                                       "segments": 5,
+                                       "expected_segments": 6}}
+    out = _regression_gate(short, here=str(tmp_path))
+    assert set(out["flagged"]) == {"flagship:segments"}

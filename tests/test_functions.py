@@ -1166,35 +1166,6 @@ class TestMatroska:
         assert make_envelope(raw[:-19])["type"] == "corrupt_media"
 
 
-# ------------------------------------------------------- ops listener
-
-def test_ops_metrics_listener(spark):
-    from streamprocess_spark.streaming import metrics as OM
-    from streamprocess_spark.streaming.core import events_stream, run_to_completion
-    from pyspark.sql import functions as F
-    from tests.conftest import SF_DIR
-
-    listener = OM.attach(spark)
-    try:
-        stream, _ = events_stream(spark, SF_DIR)
-        agg = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-        result = run_to_completion(agg, "complete")
-        assert result.count() == 5
-        # listener callbacks are async; wait briefly for delivery
-        import time
-        for _ in range(40):
-            if listener.metrics.batches:
-                break
-            time.sleep(0.25)
-        s = listener.metrics.summary()
-        assert s["n_batches"] >= 1
-        assert s["total_input_rows"] > 0
-        assert s["batch_ms_p99"] >= s["batch_ms_p50"] >= 0
-        assert s["max_state_rows"] >= 5  # one state row per event_type
-    finally:
-        OM.detach(spark, listener)
-
-
 # ------------------------------------------------ FLAC container (S15)
 
 from streamprocess_spark.functions import flac as FL

@@ -98,21 +98,12 @@ def test_stateful_dedup_across_batches(spark, split_dir, duck):
 def test_multiple_micro_batches_actually_ran(spark, split_dir):
     """Guard: the split replay must produce >1 micro-batch, else the
     tests above degrade to the single-batch case."""
-    from streamprocess_spark.streaming import metrics as OM
+    from streamprocess_spark.streaming import core
 
-    listener = OM.attach(spark)
-    try:
-        stream = _stream(spark, split_dir)
-        agg = stream.groupBy("event_type").count()
-        run_to_completion(agg, "complete")
-        import time
-        for _ in range(40):
-            if len(listener.metrics.batches) >= N_SPLITS:
-                break
-            time.sleep(0.25)
-        assert len(listener.metrics.batches) >= N_SPLITS
-    finally:
-        OM.detach(spark, listener)
+    stream = _stream(spark, split_dir)
+    agg = stream.groupBy("event_type").count()
+    run_to_completion(agg, "complete")
+    assert core.LAST_RUN["batches"] >= N_SPLITS
 
 
 def test_autoscaler_state_continues_across_microbatches(spark, tmp_path):
