@@ -116,19 +116,16 @@ def _bench_queries(spark, names: list[str], d: str,
 
 
 @contextlib.contextmanager
-def _spark_conf(spark, conf: dict[str, str | None]):
-    """Set each session conf for the block (None unsets it), then put
-    every key back to what it was before."""
+def _spark_conf(spark, conf: dict[str, str]):
+    """Set each session conf for the block, then put every key back to
+    what it was before."""
     saved: dict[str, str | None] = {}
     for k, v in conf.items():
         try:
             saved[k] = spark.conf.get(k)
         except Exception:
             saved[k] = None
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
+        spark.conf.set(k, v)
     try:
         yield
     finally:
@@ -614,15 +611,11 @@ N_STREAMS = 100
 SCALE_STREAMS = 1000
 
 # The flagship legs after the even one, each mapped to the leg whose
-# chunks/s it must stay within 2x of. Of the two checkpoint-profile A/B
-# legs, a session runs the one for the profile it is NOT on:
-# _CKPT_AB_LEGS[session_is_local].
-_CKPT_AB_LEGS = ("local_ckpt", "default_ckpt")
+# chunks/s it must stay within 2x of.
 _FLAGSHIP_LEGS = {
     "skew": "even", "scale": "even", "rocksdb": "even",
     # same workload as the in-memory scale leg, provider swapped
     "scale_rocksdb": "scale",
-    **dict.fromkeys(_CKPT_AB_LEGS, "even"),
 }
 
 
@@ -779,11 +772,7 @@ def _bench_flagship(spark, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     from streamprocess_spark.io.tables import load_tables
-    from streamprocess_spark.session import (
-        _LOCAL_CHECKPOINT_CONF,
-        LOCAL_CHECKPOINT_PROFILE_ENV,
-        rocksdb_state_conf,
-    )
+    from streamprocess_spark.session import rocksdb_state_conf
     from streamprocess_spark.streaming.sessionizer import (
         DEFAULT_CONFIG,
         chunks_from_events,
@@ -828,23 +817,6 @@ def _bench_flagship(spark, sf_dir: str) -> dict:
         out["scale_rocksdb"] = _flagship_once(
             spark, chunks_scale, f"scale-{SCALE_STREAMS}-rocksdb",
         )
-
-    # Local-checkpoint profile A/B: the opt-in profile
-    # (session.local_checkpoint_profile_conf, env
-    # SPARK_GRAFT_LOCAL_CHECKPOINT_PROFILE) trades HDFS atomic rename +
-    # corruption detection for fewer checkpoint file ops — right for
-    # local/bench hosts, wrong for HDFS. Record both sides every run:
-    # which profile the session ran (`checkpoint_profile`), plus an
-    # even-leg rerun under the OTHER profile.
-    session_is_local = bool(os.environ.get(LOCAL_CHECKPOINT_PROFILE_ENV))
-    out["checkpoint_profile"] = "local" if session_is_local else "default"
-    ab_leg = _CKPT_AB_LEGS[session_is_local]
-    # the A/B leg runs the other profile: Spark defaults (confs unset)
-    # when the session is local, the local profile otherwise
-    ab_conf = (dict.fromkeys(_LOCAL_CHECKPOINT_CONF) if session_is_local
-               else _LOCAL_CHECKPOINT_CONF)
-    with _spark_conf(spark, ab_conf):
-        out[ab_leg] = _flagship_once(spark, chunks, ab_leg)
     return out
 
 
@@ -1064,14 +1036,8 @@ def _compact(result: dict) -> dict:
     if fs:
         compact["flagship"] = _tp(fs)
         for leg in _FLAGSHIP_LEGS:
-            if not fs.get(leg):
-                continue
-            # the checkpoint-profile A/B leg keeps only its headline
-            # figure (byte budget); its NAME says which side the
-            # session ran, and runs/nb live in the full line
-            compact["flagship"][leg] = (
-                {"cps": fs[leg].get("chunks_per_sec")}
-                if leg in _CKPT_AB_LEGS else _tp(fs[leg], cps_key="cps"))
+            if fs.get(leg):
+                compact["flagship"][leg] = _tp(fs[leg], cps_key="cps")
     if result.get("streaming"):
         compact["streaming"] = _tp(result["streaming"])
     if result.get("curation"):

@@ -1,17 +1,9 @@
-"""StructType registry for every engine entity.
+"""StructType registry for the analytic substrate (TESTDATA.md /
+FIXTURES.md §A) and the events.props payload.
 
-Analytic substrate (TESTDATA.md / FIXTURES.md §A) plus the
-reference-shaped envelopes the streaming operators consume:
-
-  - job envelope     ≈ reference job dict (src/queue/redis_queue.py:109-122)
-  - audio chunk      ≈ AudioChunk (protos/stream_process.proto:100-105)
-  - transcript event ≈ TranscriptEvent (protos/stream_process.proto:114-128)
-  - OCR result tree  ≈ OCRResult→TextBlock→TextLine→Word with BoundingBox
-                       (protos/stream_process.proto:242-289)
-
-Everything is declared explicitly — the reference passes free-form JSON
-dicts end to end; here the proto is the source of truth and payloads go
-through from_json with these schemas.
+The streaming shapes are declared next to the operators that read
+them (FIXTURES.md §B lists where); payloads go through from_json with
+those schemas.
 """
 
 from __future__ import annotations
@@ -117,86 +109,6 @@ TABLE_SCHEMAS: dict[str, T.StructType] = {
 }
 
 TABLE_NAMES = tuple(TABLE_SCHEMAS)
-
-# ---------------------------------------------------------------------------
-# Reference-shaped envelopes (FIXTURES.md §B)
-# ---------------------------------------------------------------------------
-
-# Job envelope — mirrors the queue job dict assembled at
-# src/grpc_server/server.py:99-108 and serialized at redis_queue.py:109-122.
-JOB_ENVELOPE = T.StructType([
-    T.StructField("job_id", T.StringType(), False),
-    T.StructField("type", T.StringType()),           # stt_chunk|stt_batch|ocr_single|ocr_batch
-    T.StructField("priority", T.IntegerType()),      # 0..3 (LOW..REALTIME), proto:12-17
-    T.StructField("enqueued_at", T.TimestampType()),
-    T.StructField("retry_count", T.IntegerType()),
-    T.StructField("deadline", T.TimestampType()),    # EDF key (stt_worker.py:173,411)
-    T.StructField("payload", T.StringType()),        # JSON; from_json per type
-])
-
-# Audio chunk — AudioChunk proto (protos/stream_process.proto:100-105)
-# plus the session/event-time columns the Spark rebuild needs.
-AUDIO_CHUNK = T.StructType([
-    T.StructField("session_id", T.StringType(), False),
-    T.StructField("seq", T.LongType()),
-    T.StructField("ts", T.TimestampType()),
-    T.StructField("offset_ms", T.LongType()),
-    T.StructField("duration_ms", T.IntegerType()),
-    T.StructField("samples", T.ArrayType(T.FloatType())),
-    T.StructField("is_final", T.BooleanType()),
-])
-
-# Transcript event — TranscriptEvent (protos/stream_process.proto:114-128).
-TRANSCRIPT_EVENT = T.StructType([
-    T.StructField("session_id", T.StringType(), False),
-    T.StructField("job_id", T.StringType()),
-    T.StructField("event_type", T.StringType()),     # PARTIAL|FINAL|END_OF_UTTERANCE
-    T.StructField("offset_ms", T.LongType()),
-    T.StructField("is_partial", T.BooleanType()),
-    T.StructField("transcript", T.StringType()),
-    T.StructField("confidence", T.FloatType()),
-    T.StructField("language", T.StringType()),
-    T.StructField("stability", T.FloatType()),
-])
-
-BOUNDING_BOX = T.StructType([
-    T.StructField("x", T.IntegerType()),
-    T.StructField("y", T.IntegerType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("rotation", T.FloatType()),
-])
-
-OCR_WORD = T.StructType([
-    T.StructField("text", T.StringType()),
-    T.StructField("confidence", T.FloatType()),
-    T.StructField("bbox", BOUNDING_BOX),
-])
-
-OCR_LINE = T.StructType([
-    T.StructField("text", T.StringType()),
-    T.StructField("confidence", T.FloatType()),
-    T.StructField("bbox", BOUNDING_BOX),
-    T.StructField("words", T.ArrayType(OCR_WORD)),
-])
-
-OCR_BLOCK = T.StructType([
-    T.StructField("block_type", T.StringType()),     # TEXT|TITLE|TABLE|FIGURE (proto:255-264)
-    T.StructField("text", T.StringType()),
-    T.StructField("confidence", T.FloatType()),
-    T.StructField("bbox", BOUNDING_BOX),
-    T.StructField("lines", T.ArrayType(OCR_LINE)),
-])
-
-# OCR result tree — OCRResult (protos/stream_process.proto:242-289).
-OCR_RESULT = T.StructType([
-    T.StructField("job_id", T.StringType(), False),
-    T.StructField("full_text", T.StringType()),
-    T.StructField("mean_confidence", T.FloatType()),
-    T.StructField("char_count", T.LongType()),
-    T.StructField("word_count", T.LongType()),
-    T.StructField("blocks", T.ArrayType(OCR_BLOCK)),
-])
 
 # events.props payload schema (FIXTURES.md: JSON job-envelope analog).
 EVENT_PROPS = T.StructType([

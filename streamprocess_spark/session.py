@@ -19,6 +19,7 @@ on local[N]):
 from __future__ import annotations
 
 import os
+import re
 import sys
 import tempfile
 import zipfile
@@ -97,7 +98,7 @@ def get_spark(
         .config("spark.sql.streaming.stateStore.providerClass",
                 "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
     )
-    for k, v in local_checkpoint_profile_conf().items():
+    for k, v in local_streaming_conf(master).items():
         builder = builder.config(k, v)
     # Python processes the JVM launches inherit its env (this driver's,
     # in local mode), so the PYTHONPATH committed here BEFORE the JVM
@@ -124,38 +125,52 @@ def get_spark(
     return builder.getOrCreate()
 
 
-# Local-filesystem checkpoint deployment profile (round-10 verdict #4).
-# Round-10 profiling measured ~0.5 s/trigger of LOCAL-ONLY streaming
-# checkpoint overhead on hosts without libhadoop: Spark's default
-# CheckpointFileManager resolves through Hadoop's FileContext, which —
-# absent the native lib — forks a `readlink` subprocess per rename,
-# and Spark 4.1's checkpoint checksum sidecars serialize extra file
-# ops through a small pool (A/B: 1.3 s -> 0.73 s per empty trigger).
-# The cure trades DOCUMENTED properties, so it is opt-in, never the
-# default:
-#   - FileSystemBasedCheckpointFileManager writes checkpoint files
-#     without FileContext's atomic-rename guarantee — safe on a local
-#     filesystem / in tests, NOT what you want on HDFS where a crashed
-#     driver mid-rename could leave a torn offset file;
-#   - checksum-off drops Spark 4.1's checkpoint corruption detection.
-# Enable with SPARK_GRAFT_LOCAL_CHECKPOINT_PROFILE=1 for local/bench
-# deployments; a cluster run on HDFS/S3 should leave it unset.
-LOCAL_CHECKPOINT_PROFILE_ENV = "SPARK_GRAFT_LOCAL_CHECKPOINT_PROFILE"
+# Streaming defaults for a local-mode driver, where the driver is the
+# only executor and every checkpoint is on its own disk:
+#   - FileSystemBasedCheckpointFileManager. Spark's default manager
+#     goes through Hadoop's FileContext, which on a host without
+#     libhadoop forks a `readlink`/`stat` subprocess for every rename
+#     (RawLocalFileSystem.getFileLinkStatusInternal). That was most of
+#     each trigger's state-store commit time. The FileSystem manager
+#     writes a temp file and renames it with FileSystem.rename, which
+#     on a local POSIX filesystem is one rename(2): a reader sees the
+#     old file or the whole new one, never part of it. Any other master
+#     keeps Spark's default: on HDFS or an object store, FileContext's
+#     atomic rename is the guarantee that keeps a crashed driver from
+#     leaving a torn offset file.
+#   - spark.sql.streaming.checkpoint.fileChecksum.enabled is left at
+#     Spark's default (on): the checksum sidecars are how a corrupted
+#     checkpoint file is detected, and they cost little once renames
+#     stop forking.
+#   - One state partition per core. Every state partition is a task
+#     that loads and commits a store on every trigger, so on a small
+#     local batch that per-task cost, not rows, sets the trigger time;
+#     with one partition per core the stateful stage runs in one wave.
+#     spark.sql.streaming.internal.stateStore.partitions is an
+#     internal conf, but in Spark 4.1 it is the only one that sizes
+#     stateful operators apart from batch shuffles, which keep
+#     spark.sql.shuffle.partitions. Spark reads it when a query starts
+#     on a NEW checkpoint and records it in the offset log as that
+#     checkpoint's spark.sql.shuffle.partitions; a restarted query
+#     keeps the recorded count whatever the session says, because
+#     state is partitioned by it.
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
-_LOCAL_CHECKPOINT_CONF = {
-    "spark.sql.streaming.checkpointFileManagerClass":
-        "org.apache.spark.sql.execution.streaming.checkpointing."
-        "FileSystemBasedCheckpointFileManager",
-    "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
-}
 
-
-def local_checkpoint_profile_conf() -> dict[str, str]:
-    """The session confs the profile applies — {} unless the env gate
-    is set, so default behavior is byte-identical to Spark defaults."""
-    if os.environ.get(LOCAL_CHECKPOINT_PROFILE_ENV):
-        return dict(_LOCAL_CHECKPOINT_CONF)
-    return {}
+def local_streaming_conf(master: str) -> dict[str, str]:
+    """The streaming confs a session on ``master`` adds to Spark's
+    defaults: the two local-mode defaults above for ``local`` /
+    ``local[...]``, and none for any other master."""
+    if not re.fullmatch(r"local(\[.*\])?", master):
+        return {}
+    return {
+        "spark.sql.streaming.checkpointFileManagerClass": _FS_CHECKPOINT_MANAGER,
+        "spark.sql.streaming.internal.stateStore.partitions":
+            str(default_parallelism()),
+    }
 
 
 # RocksDB state-store deployment profile. Stage attribution of the

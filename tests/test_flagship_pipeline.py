@@ -3,35 +3,45 @@ jobs enqueued into the priority_queue DataSource (S6/S7), streamed
 through the applyInPandasWithState sessionizer (T1-T9), segments
 delivered to the result_store sink (S9) keyed `{session_id}_{offset}`
 exactly like the reference (stt_worker.py:296-300). Converged results
-must equal the batch sessionizer on the same chunks."""
+must equal the batch sessionizer on the same chunks, also when the
+serving process is killed mid-stream and restarted on its checkpoint."""
 
 from __future__ import annotations
 
+import contextlib
 import json
+import os
+import random
+import signal
+import subprocess
+import sys
 import time
 
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from streamprocess_spark.io.queue_source import enqueue_job, register_queue_source
-from streamprocess_spark.io.result_sink import read_result, register_result_sink
+from streamprocess_spark.io.result_sink import read_result
 from streamprocess_spark.io.tables import load_tables
 from streamprocess_spark.streaming.sessionizer import (
     DEFAULT_CONFIG,
     chunks_from_events,
     sessionize_batch,
-    sessionize_stream,
 )
 from tests.conftest import SF_DIR
+from tests.flagship_query import PAYLOAD_COLUMNS, enqueue_chunks, start_query
 
-_PAYLOAD_SCHEMA = T.StructType(
-    [
-        T.StructField("seq", T.LongType()),
-        T.StructField("offset_ms", T.LongType()),
-        T.StructField("is_final", T.BooleanType()),
-        T.StructField("samples", T.ArrayType(T.FloatType())),
-    ]
-)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# kill point of the crash-restart test: after 1-4 committed triggers
+CRASH_SEED = 6
+# queue lines per trigger: the ~380-chunk backlog spans ~16 triggers
+CRASH_MAX_RECORDS = 24
+
+
+def _expected(chunks) -> dict:
+    expected = {
+        f"{r['session_id']}_{r['start_offset_ms']}": r
+        for r in sessionize_batch(chunks, DEFAULT_CONFIG).collect()
+    }
+    assert expected, "batch sessionizer produced no segments"
+    return expected
 
 
 def test_queue_to_sessionizer_to_result_store(spark, tmp_path):
@@ -41,61 +51,10 @@ def test_queue_to_sessionizer_to_result_store(spark, tmp_path):
 
     ev = load_tables(spark, SF_DIR)["events"]
     chunks = chunks_from_events(ev, DEFAULT_CONFIG, max_users=6)
-
-    # producer edge: chunk rows → job envelopes in the priority logs
-    # (the gRPC server's enqueue path, server.py:99-108 + add_job)
-    prios = ("realtime", "high", "normal", "low")
-    for row in chunks.orderBy("session_id", "seq").toLocalIterator():
-        enqueue_job(
-            qdir,
-            prios[int(row["session_id"]) % 4],
-            {
-                "job_id": f"{row['session_id']}-{row['seq']}",
-                "type": "stt_chunk",
-                "payload": {
-                    "seq": row["seq"],
-                    "offset_ms": row["offset_ms"],
-                    "is_final": row["is_final"],
-                    "samples": [float(x) for x in row["samples"]],
-                },
-            },
-        )
-
-    register_queue_source(spark)
-    register_result_sink(spark)
-
-    jobs = spark.readStream.format("priority_queue").option("path", qdir).load()
-    chunk_stream = (
-        jobs.filter(F.col("type") == "stt_chunk")
-        .select(
-            F.split(F.col("job_id"), "-")[0].alias("session_id"),
-            F.from_json("payload", _PAYLOAD_SCHEMA).alias("p"),
-        )
-        .select("session_id", "p.seq", "p.offset_ms", "p.is_final", "p.samples")
-    )
-    segments = sessionize_stream(chunk_stream, DEFAULT_CONFIG).select(
-        F.concat_ws("_", "session_id", "start_offset_ms").alias("job_id"),
-        "session_id",
-        "segment_idx",
-        "n_samples",
-        "is_partial",
-        "trigger",
-        "transcript",
-    )
-    query = (
-        segments.writeStream.format("result_store")
-        .option("path", rdir)
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="200 milliseconds")
-        .start()
-    )
+    enqueue_chunks(qdir, chunks)
+    query = start_query(spark, qdir, rdir, ckpt)
     try:
-        expected = {
-            f"{r['session_id']}_{r['start_offset_ms']}": r
-            for r in sessionize_batch(chunks, DEFAULT_CONFIG).collect()
-        }
-        assert expected, "batch sessionizer produced no segments"
-
+        expected = _expected(chunks)
         deadline = time.time() + 90
         missing = set(expected)
         while time.time() < deadline and missing:
@@ -111,3 +70,87 @@ def test_queue_to_sessionizer_to_result_store(spark, tmp_path):
             assert got["trigger"] == exp["trigger"], key
     finally:
         query.stop()
+
+
+def _log_entries(ckpt: str, log: str) -> int:
+    d = os.path.join(ckpt, log)
+    return sum(f.isdigit() for f in os.listdir(d)) if os.path.isdir(d) else 0
+
+
+def _log_tail(path: str) -> str:
+    with open(path) as f:
+        return f.read()[-3000:]
+
+
+def test_killed_pipeline_restarts_to_the_batch_answer(spark, tmp_path):
+    """SIGKILL the serving process's whole process group inside the
+    trigger after a seeded number of committed ones, restart a fresh
+    process on the same checkpoint, and require exactly the batch
+    sessionizer's segments:
+    every key once with its payload, no extra key, no temp or torn
+    file, and every segment counted by exactly one committed sink
+    batch."""
+    qdir = str(tmp_path / "q")
+    rdir = str(tmp_path / "r")
+    ckpt = str(tmp_path / "ckpt")
+    ev = load_tables(spark, SF_DIR)["events"]
+    chunks = chunks_from_events(ev, DEFAULT_CONFIG, max_users=6)
+    n_lines = enqueue_chunks(qdir, chunks)
+    expected = _expected(chunks)
+    kill_at = random.Random(CRASH_SEED).randint(1, 4)
+
+    cmd = [sys.executable, "-m", "tests.flagship_query", "--queue", qdir,
+           "--results", rdir, "--ckpt", ckpt,
+           "--max-records", str(CRASH_MAX_RECORDS)]
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    log1 = str(tmp_path / "run1.log")
+    with open(log1, "w") as out:
+        proc = subprocess.Popen(cmd, cwd=REPO, env=env, stdout=out,
+                                stderr=subprocess.STDOUT,
+                                start_new_session=True)
+    try:
+        # kill mid-trigger: the next batch is in the offset log but not
+        # yet committed, so the restart must re-run it
+        deadline = time.time() + 240
+        while not (_log_entries(ckpt, "offsets") > _log_entries(ckpt, "commits")
+                   >= kill_at):
+            assert proc.poll() is None, _log_tail(log1)
+            assert time.time() < deadline, _log_tail(log1)
+            time.sleep(0.01)
+    finally:
+        with contextlib.suppress(ProcessLookupError):
+            os.killpg(proc.pid, signal.SIGKILL)
+        proc.wait()
+    delivered_at_kill = sum(f.endswith(".json") for f in os.listdir(rdir))
+    assert delivered_at_kill < len(expected), "killed after the stream drained"
+
+    log2 = str(tmp_path / "run2.log")
+    with open(log2, "w") as out:
+        rc = subprocess.run(cmd + ["--lines", str(n_lines)], cwd=REPO,
+                            env=env, stdout=out, stderr=subprocess.STDOUT,
+                            timeout=300).returncode
+    assert rc == 0, _log_tail(log2)
+
+    files = os.listdir(rdir)
+    assert not [f for f in files if ".tmp." in f], files
+    results = {}
+    for f in files:
+        if f.endswith(".json"):
+            with open(os.path.join(rdir, f)) as fh:
+                doc = json.load(fh)  # a torn file fails here
+            assert f == f"result-{doc['job_id']}.json"
+            results[doc["job_id"]] = doc["payload"]
+    assert sorted(results) == sorted(expected), (
+        f"kill after {kill_at} commits: missing "
+        f"{sorted(set(expected) - set(results))[:5]}, extra "
+        f"{sorted(set(results) - set(expected))[:5]}")
+    for key, exp in expected.items():
+        assert results[key] == {c: exp[c] for c in PAYLOAD_COLUMNS}, key
+
+    # no duplicate delivery: each committed sink batch records how many
+    # results it wrote, and a re-run batch overwrites its own marker
+    written = 0
+    for marker in os.listdir(os.path.join(rdir, "_commits")):
+        with open(os.path.join(rdir, "_commits", marker)) as fh:
+            written += json.load(fh)["n_written"]
+    assert written == len(expected), (written, len(expected))

@@ -169,40 +169,28 @@ def test_autoscaler_state_continues_across_microbatches(spark, tmp_path):
     assert list(got["replicas"]) == list(want["replicas"]) == [5, 5, 5, 1]
 
 
-def test_local_checkpoint_profile_gated_and_settable(spark):
-    """Round-10 verdict #4: the local-checkpoint deployment profile is
-    env-gated (defaults byte-identical to Spark defaults) and both its
-    confs exist in this Spark build and are session-settable — the
-    bench A/B leg flips them at runtime. Engagement is measured, not
-    assumed: the round-11 empty-trigger probe read ~170 ms/trigger
-    under the profile vs ~510 ms on defaults (see HISTORY.md)."""
-    import os
-
+def test_local_master_gets_filesystem_checkpoint_manager(spark):
+    """A local-mode session commits checkpoints through Spark's
+    FileSystem-based manager with checksums left on; any other master
+    gets neither local-mode streaming conf."""
     from streamprocess_spark.session import (
-        _LOCAL_CHECKPOINT_CONF,
-        LOCAL_CHECKPOINT_PROFILE_ENV,
-        local_checkpoint_profile_conf,
+        _FS_CHECKPOINT_MANAGER,
+        local_streaming_conf,
     )
 
-    assert not os.environ.get(LOCAL_CHECKPOINT_PROFILE_ENV)
-    assert local_checkpoint_profile_conf() == {}
-    os.environ[LOCAL_CHECKPOINT_PROFILE_ENV] = "1"
-    try:
-        assert local_checkpoint_profile_conf() == _LOCAL_CHECKPOINT_CONF
-    finally:
-        del os.environ[LOCAL_CHECKPOINT_PROFILE_ENV]
-    saved = {}
-    try:
-        for k, v in _LOCAL_CHECKPOINT_CONF.items():
-            try:
-                saved[k] = spark.conf.get(k)
-            except Exception:
-                saved[k] = None
-            spark.conf.set(k, v)   # must not raise (runtime-settable)
-            assert spark.conf.get(k) == v
-    finally:
-        for k, v in saved.items():
-            if v is not None:
-                spark.conf.set(k, v)
-            else:
-                spark.conf.unset(k)
+    manager = "spark.sql.streaming.checkpointFileManagerClass"
+    partitions = "spark.sql.streaming.internal.stateStore.partitions"
+    checksum = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    for master in ("local", "local[2]", "local[*]", "local[4,2]"):
+        assert local_streaming_conf(master)[manager] == _FS_CHECKPOINT_MANAGER
+    for master in ("yarn", "spark://host:7077", "k8s://https://host:443",
+                   "local-cluster[2,1,1024]"):
+        conf = local_streaming_conf(master)
+        assert manager not in conf and partitions not in conf, master
+
+    assert spark.sparkContext.master.startswith("local")
+    assert spark.conf.get(manager) == _FS_CHECKPOINT_MANAGER
+    # corruption detection stays: nothing in the session turns it off
+    assert spark.conf.get(checksum, "true") != "false"
+    assert dict(spark.sparkContext.getConf().getAll()).get(
+        checksum, "true") != "false"
