@@ -277,34 +277,27 @@ def _sinc_table(num_zeros: int, beta: float, rolloff: float) -> np.ndarray:
     return hit
 
 
-def np_resample_kaiser(x: np.ndarray, orig_sr: int, target_sr: int,
-                       num_zeros: int = KAISER_BEST_ZEROS,
-                       beta: float = KAISER_BEST_BETA,
-                       rolloff: float = KAISER_BEST_ROLLOFF) -> np.ndarray:
-    """F1 parity kernel: band-limited sinc interpolation with a Kaiser
-    window — the librosa/resampy kaiser_best algorithm family
-    (audio_processor.py:70-82 calls librosa.resample). Output length
-    follows the librosa convention ceil(n * target / orig). Taps come
-    from a dense precomputed table with linear interpolation (the
-    resampy construction). Fully vectorized; memory is bounded by
-    blocking over output samples."""
-    x = np.asarray(x, dtype=np.float64)
-    if orig_sr == target_sr or len(x) == 0:
-        return x.astype(np.float32)
+def np_kaiser_phase_taps(orig_sr: int, target_sr: int,
+                         num_zeros: int = KAISER_BEST_ZEROS,
+                         beta: float = KAISER_BEST_BETA,
+                         rolloff: float = KAISER_BEST_ROLLOFF,
+                         ) -> tuple[int, int, int, list[np.ndarray]]:
+    """Polyphase filter bank of ``np_resample_kaiser``: the reduced
+    ratio p/q, the filter half-width, and the p tap vectors (one per
+    output phase) over input offsets -half..half. Taps are linearly
+    interpolated from the dense windowed-sinc table (the resampy
+    construction)."""
     from math import gcd
 
     g = gcd(int(target_sr), int(orig_sr))
     p, q = int(target_sr) // g, int(orig_sr) // g  # ratio = p/q reduced
-    ratio = p / q
-    n_out = int(np.ceil(len(x) * ratio))
-    scale = min(1.0, ratio)  # shrink the filter when downsampling
+    scale = min(1.0, p / q)  # shrink the filter when downsampling
     table = _sinc_table(num_zeros, beta, rolloff)
     half = int(np.ceil(num_zeros / scale)) + 1
     offs = np.arange(-half, half + 1, dtype=np.float64)
 
     def taps_for(frac: float) -> np.ndarray:
-        """Windowed-sinc taps at fractional input offset `frac`,
-        linearly interpolated from the dense table."""
+        """Windowed-sinc taps at fractional input offset `frac`."""
         pos = np.abs(offs - frac) * scale * _SINC_DENSITY
         i0 = pos.astype(np.int64)
         oob = i0 >= len(table) - 1
@@ -314,17 +307,35 @@ def np_resample_kaiser(x: np.ndarray, orig_sr: int, target_sr: int,
         t[oob] = 0.0
         return t
 
-    # polyphase: output i = k*p + ph sits at input time k*q + ph*q/p,
-    # so each of the p phases has ONE tap vector; its application is a
-    # BLAS matvec over a zero-copy strided view of the padded input.
+    # output i = k*p + ph sits at input time k*q + ph*q/p
+    return p, q, half, [taps_for((ph * q % p) / p) for ph in range(p)]
+
+
+def np_resample_kaiser(x: np.ndarray, orig_sr: int, target_sr: int,
+                       num_zeros: int = KAISER_BEST_ZEROS,
+                       beta: float = KAISER_BEST_BETA,
+                       rolloff: float = KAISER_BEST_ROLLOFF) -> np.ndarray:
+    """F1 parity kernel: band-limited sinc interpolation with a Kaiser
+    window — the librosa/resampy kaiser_best algorithm family
+    (audio_processor.py:70-82 calls librosa.resample). Output length
+    follows the librosa convention ceil(n * target / orig). Taps come
+    from ``np_kaiser_phase_taps``. Fully vectorized; memory is bounded by
+    blocking over output samples."""
+    x = np.asarray(x, dtype=np.float64)
+    if orig_sr == target_sr or len(x) == 0:
+        return x.astype(np.float32)
+    p, q, half, taps = np_kaiser_phase_taps(orig_sr, target_sr, num_zeros,
+                                            beta, rolloff)
+    n_out = int(np.ceil(len(x) * p / q))
+    # polyphase: each of the p phases has ONE tap vector; its
+    # application is a BLAS matvec over a zero-copy strided view of the
+    # padded input.
     xp = np.concatenate([
         np.zeros(half), x, np.zeros(half + q + 1)
     ])
     out = np.empty(n_out, dtype=np.float64)
-    for ph in range(p):
-        num = ph * q
-        base, frac = divmod(num, p)
-        c = taps_for(frac / p)
+    for ph, c in enumerate(taps):
+        base = ph * q // p
         n_k = (n_out - ph + p - 1) // p
         if n_k <= 0:
             continue

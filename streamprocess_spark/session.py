@@ -98,7 +98,7 @@ def get_spark(
         .config("spark.sql.streaming.stateStore.providerClass",
                 "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
     )
-    for k, v in local_streaming_conf(master).items():
+    for k, v in local_master_conf(master).items():
         builder = builder.config(k, v)
     # Python processes the JVM launches inherit its env (this driver's,
     # in local mode), so the PYTHONPATH committed here BEFORE the JVM
@@ -125,8 +125,8 @@ def get_spark(
     return builder.getOrCreate()
 
 
-# Streaming defaults for a local-mode driver, where the driver is the
-# only executor and every checkpoint is on its own disk:
+# Defaults for a local-mode driver, where the driver is the only
+# executor and every checkpoint and Python worker is on its own host:
 #   - FileSystemBasedCheckpointFileManager. Spark's default manager
 #     goes through Hadoop's FileContext, which on a host without
 #     libhadoop forks a `readlink`/`stat` subprocess for every rename
@@ -154,23 +154,45 @@ def get_spark(
 #     checkpoint's spark.sql.shuffle.partitions; a restarted query
 #     keeps the recorded count whatever the session says, because
 #     state is partitioned by it.
+#   - Python workers over Unix domain sockets. Spark's loopback TCP
+#     sockets to its workers do not set TCP_NODELAY, and in most
+#     Python tasks of a streaming trigger the worker waited 37-45 ms
+#     between receiving its command and its first input: Nagle's
+#     algorithm meeting a delayed ACK. A Unix socket has no Nagle; with
+#     it that wait was 0-1 ms. The conf covers every Python runner,
+#     batch UDFs included. Spark creates each socket as
+#     <dir>/.<uuid>.sock and caps the dir at 61 chars so the path fits
+#     sun_path; a longer temp dir keeps TCP rather than fail worker
+#     creation. Only a local master gets this: elsewhere the workers
+#     run on other hosts, where this driver's temp dir means nothing.
 _FS_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+_UDS_DIR_MAX_CHARS = 61
 
 
-def local_streaming_conf(master: str) -> dict[str, str]:
-    """The streaming confs a session on ``master`` adds to Spark's
-    defaults: the two local-mode defaults above for ``local`` /
-    ``local[...]``, and none for any other master."""
+def local_master_conf(master: str, sock_dir: str | None = None) -> dict[str, str]:
+    """The confs a session on ``master`` adds to Spark's defaults: the
+    local-mode defaults above for ``local`` / ``local[...]``, and none
+    for any other master. ``sock_dir`` (default: the temp dir) holds
+    the Python workers' Unix sockets; when it is longer than Spark
+    allows, workers stay on TCP and one line on stderr says so."""
     if not re.fullmatch(r"local(\[.*\])?", master):
         return {}
-    return {
+    conf = {
         "spark.sql.streaming.checkpointFileManagerClass": _FS_CHECKPOINT_MANAGER,
         "spark.sql.streaming.internal.stateStore.partitions":
             str(default_parallelism()),
     }
+    sock_dir = sock_dir or tempfile.gettempdir()
+    if len(sock_dir) <= _UDS_DIR_MAX_CHARS:
+        conf["spark.python.unix.domain.socket.enabled"] = "true"
+        conf["spark.python.unix.domain.socket.dir"] = sock_dir
+    else:
+        print(f"[session] temp dir longer than {_UDS_DIR_MAX_CHARS} chars "
+              f"({sock_dir}); Python workers use TCP", file=sys.stderr)
+    return conf
 
 
 # RocksDB state-store deployment profile. Stage attribution of the

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -345,9 +346,13 @@ BLEND_STATE_SCHEMA = T.StructType([
     T.StructField("last_t", T.DoubleType()),
     # trailing regression window, bounded at 6 points by the 120 s
     # cadence — carried so a micro-batch boundary inside a 600 s
-    # window does not perturb the predictive leg
-    T.StructField("hist_t", T.ArrayType(T.DoubleType())),
-    T.StructField("hist_r", T.ArrayType(T.DoubleType())),
+    # window does not perturb the predictive leg. Stored as
+    # little-endian float64 bytes (bit-exact), not array<double>: an
+    # array field makes the state encoder's generated code differ on
+    # every trigger, so it would be compiled again each time (see
+    # sessionizer.STATE_SCHEMA_DDL)
+    T.StructField("hist_t", T.BinaryType()),
+    T.StructField("hist_r", T.BinaryType()),
 ])
 
 
@@ -361,7 +366,8 @@ def blended_stream_fn(key, pdf_iter, state):
     if state.exists:
         (replicas, last_scale, integral, last_err, last_t,
          hist_t, hist_r) = state.get
-        hist = list(zip(hist_t or [], hist_r or []))
+        hist = list(zip(np.frombuffer(hist_t, dtype="<f8").tolist(),
+                        np.frombuffer(hist_r, dtype="<f8").tolist()))
     else:
         replicas, last_scale, integral, last_err, last_t = (
             BLEND_MIN, 0.0, 0.0, 0.0, -1.0
@@ -372,8 +378,9 @@ def blended_stream_fn(key, pdf_iter, state):
         float(last_err), float(last_t), hist
     )
     state.update((int(st[0]), float(st[1]), float(st[2]), float(st[3]),
-                  float(st[4]), [h[0] for h in st[5]],
-                  [h[1] for h in st[5]]))
+                  float(st[4]),
+                  np.array([h[0] for h in st[5]], dtype="<f8").tobytes(),
+                  np.array([h[1] for h in st[5]], dtype="<f8").tobytes()))
     yield out
 
 

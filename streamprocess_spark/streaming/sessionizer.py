@@ -29,6 +29,7 @@ a pure function of event time — no wall-clock anywhere.
 from __future__ import annotations
 
 import hashlib
+import json
 from dataclasses import dataclass
 from typing import Iterable, Iterator
 
@@ -92,10 +93,17 @@ SEGMENT_SCHEMA_DDL = (
     "trigger string, mean_energy double, transcript string, n_context int"
 )
 
-# state tuple layout for GroupState (must be a flat Row):
+# State tuple layout for GroupState. It holds no array column: Spark
+# re-plans the stateful operator on every trigger and builds a new state
+# encoder each time, and an array field's MapObjects takes fresh
+# lambda-variable ids, so the generated (de)serializer source differs
+# every trigger, misses the codegen cache and is compiled again (two
+# classes per trigger, while the other state tasks wait on the compile
+# lock). So the audio buffer is stored as little-endian float32 bytes
+# (bit-exact round trip) and the context ring as a JSON list.
 STATE_SCHEMA_DDL = (
-    "buf array<float>, buf_start_ms long, silence_run_ms int, "
-    "in_speech boolean, seg_idx int, context array<string>"
+    "buf binary, buf_start_ms long, silence_run_ms int, "
+    "in_speech boolean, seg_idx int, context string"
 )
 
 # T9: transcript context ring buffer — last N partial transcripts kept
@@ -228,32 +236,29 @@ def sessionize_stream_fn(cfg: SessionizerConfig, idle_ms: int | None = None):
     idle > session_timeout every 100 jobs, stt_worker.py:104-106,
     419-430)."""
 
+    def restore(session_id: str, state: GroupState) -> _SessionCore:
+        (buf, buf_start_ms, silence_run_ms, in_speech, seg_idx,
+         context) = state.get
+        return _SessionCore(
+            cfg, session_id, np.frombuffer(buf, dtype="<f4"),
+            buf_start_ms, silence_run_ms, in_speech, seg_idx,
+            json.loads(context),
+        )
+
     def fn(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         session_id = key[0]
         if state.hasTimedOut:
             # T8: idle reap — flush remainder as final
-            (buf, buf_start_ms, silence_run_ms, in_speech, seg_idx,
-             context) = state.get
-            core = _SessionCore(
-                cfg, session_id, np.asarray(buf, dtype=np.float32),
-                buf_start_ms, silence_run_ms, in_speech, seg_idx,
-                list(context or []),
-            )
+            core = restore(session_id, state)
             core._emit("final", is_partial=False)
             state.remove()
             yield pd.DataFrame(core.out, columns=[f.name for f in SEGMENT_SCHEMA])
             return
 
         if state.exists:
-            (buf, buf_start_ms, silence_run_ms, in_speech, seg_idx,
-             context) = state.get
-            core = _SessionCore(
-                cfg, session_id, np.asarray(buf, dtype=np.float32),
-                buf_start_ms, silence_run_ms, in_speech, seg_idx,
-                list(context or []),
-            )
+            core = restore(session_id, state)
         else:
             core = _SessionCore.fresh(cfg, session_id)
 
@@ -266,9 +271,9 @@ def sessionize_stream_fn(cfg: SessionizerConfig, idle_ms: int | None = None):
             state.remove()
         else:
             state.update((
-                [float(x) for x in core.buf],
+                core.buf.astype("<f4").tobytes(),
                 core.buf_start_ms, core.silence_run_ms,
-                core.in_speech, core.seg_idx, list(core.context),
+                core.in_speech, core.seg_idx, json.dumps(core.context),
             ))
             if idle_ms is not None:
                 # T8: (re)arm the idle reap — the reference resets
@@ -303,7 +308,12 @@ def sessionize_stream(
     is also the semantically right split: wall-clock reaping has no
     place in an event-time-deterministic replay (core.py contract);
     it exists for continuous serving, where the reference reaps idle
-    sessions every 100 jobs (stt_worker.py:104-106,419-430)."""
+    sessions every 100 jobs (stt_worker.py:104-106,419-430).
+
+    Checkpoints written while the state held arrays (``buf
+    array<float>``, ``context array<string>``; see STATE_SCHEMA_DDL)
+    must be discarded: restarting one fails with
+    ``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``."""
     from streamprocess_spark.session import ensure_workers_can_import
 
     ensure_workers_can_import(chunks.sparkSession)

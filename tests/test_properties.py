@@ -5,7 +5,7 @@ assertions (tests/unit/test_preprocessing.py)."""
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from streamprocess_spark.functions import audio as A
@@ -329,18 +329,28 @@ from streamprocess_spark.functions import dsp  # noqa: E402
 @settings(max_examples=30, deadline=None)
 @given(float_arrays, st.sampled_from([8000, 16000, 44100, 48000]),
        st.sampled_from([8000, 16000, 44100, 48000]))
+# a 2-sample pulse at the end, upsampled 2x: its band-limited midpoint
+# is 4/pi ~ 1.273, above any fixed 1.2 overshoot bound
+@example(np.r_[np.zeros(62), 1.0, 1.0].astype(np.float32), 8000, 16000)
 def test_kaiser_resample_length_and_bound(x, orig, target):
     y = dsp.np_resample_kaiser(x, orig, target)
+    assert np.isfinite(y).all()
     if orig == target or len(x) == 0:
         assert len(y) == len(x)
-    else:
-        assert len(y) == int(np.ceil(len(x) * target / orig))
-    if len(x) >= 64:
-        # windowed-sinc interpolation of a bounded signal stays
-        # bounded by the filter's small overshoot (Gibbs ringing can
-        # exceed this on inputs shorter than the filter support)
-        assert np.max(np.abs(y)) <= np.max(np.abs(x)) * 1.2 + 1e-6
-    assert np.isfinite(y).all()
+        return
+    assert len(y) == int(np.ceil(len(x) * target / orig))
+    p, q, half, taps = dsp.np_kaiser_phase_taps(orig, target)
+    # each output sample is one phase's taps dotted with the input, so
+    # its magnitude is at most max|x| times that phase's sum of |taps|
+    gain = max(np.abs(c).sum() for c in taps)
+    assert np.max(np.abs(y)) <= np.max(np.abs(x)) * gain * (1 + 1e-6)
+    # unit DC gain: a constant comes back unchanged at every output
+    # whose filter window lies wholly inside the signal
+    n = len(x) + 2 * half + q
+    yc = dsp.np_resample_kaiser(np.full(n, 0.5, np.float32), orig, target)
+    base = np.arange(len(yc)) * q // p
+    inner = yc[(base >= half) & (base + half <= n - 1)]
+    assert len(inner) and np.abs(inner - 0.5).max() <= 1e-5
 
 
 @settings(max_examples=30, deadline=None)

@@ -4,6 +4,7 @@ replay, streaming == batch convergence, reference-derived invariants
 
 from __future__ import annotations
 
+import json
 import tempfile
 
 import numpy as np
@@ -168,8 +169,11 @@ def test_stream_fn_timeout_flushes_and_drops_state():
     its remaining buffer as a final segment and removes state."""
     from streamprocess_spark.streaming.sessionizer import sessionize_stream_fn
 
-    buf = _chunk(0.5).tolist() * 2  # 200ms buffered audio
-    state = _FakeState((buf, 1000, 0, True, 3, ["a", "b"]), timed_out=True)
+    buf = np.concatenate([_chunk(0.5)] * 2)  # 200ms buffered audio
+    state = _FakeState(
+        (buf.astype("<f4").tobytes(), 1000, 0, True, 3, json.dumps(["a", "b"])),
+        timed_out=True,
+    )
     fn = sessionize_stream_fn(CFG)
     frames = list(fn(("sess-1",), iter(()), state))
     assert state.removed and state.updated is None
@@ -201,7 +205,10 @@ def test_stream_fn_updates_state_between_batches():
     # 200ms < 320ms trigger: nothing emitted, buffer persisted
     assert not state.removed and state.updated is not None
     buf, start_ms, silence, in_speech, seg_idx, context = state.updated
+    buf, context = np.frombuffer(buf, dtype="<f4"), json.loads(context)
     assert len(buf) == 2 * CFG.chunk_samples
+    # the float32 audio round-trips through the state bytes bit-exactly
+    assert buf.tobytes() == np.concatenate([_chunk(0.5)] * 2).tobytes()
     assert in_speech is True and seg_idx == 0 and context == []
     # unarmed factory never touches the timeout API
     assert state.timeout_set_ms is None

@@ -169,24 +169,49 @@ def test_autoscaler_state_continues_across_microbatches(spark, tmp_path):
     assert list(got["replicas"]) == list(want["replicas"]) == [5, 5, 5, 1]
 
 
-def test_local_master_gets_filesystem_checkpoint_manager(spark):
+def test_local_master_gets_filesystem_checkpoint_manager(spark, capsys):
     """A local-mode session commits checkpoints through Spark's
-    FileSystem-based manager with checksums left on; any other master
-    gets neither local-mode streaming conf."""
+    FileSystem-based manager with checksums left on, and talks to its
+    Python workers over Unix sockets when the socket dir fits Spark's
+    61-char cap (else over TCP, saying so once on stderr); any other
+    master gets none of the local-mode confs."""
+    import tempfile
+
     from streamprocess_spark.session import (
         _FS_CHECKPOINT_MANAGER,
-        local_streaming_conf,
+        local_master_conf,
     )
 
     manager = "spark.sql.streaming.checkpointFileManagerClass"
     partitions = "spark.sql.streaming.internal.stateStore.partitions"
     checksum = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    uds = "spark.python.unix.domain.socket.enabled"
+    uds_dir = "spark.python.unix.domain.socket.dir"
     for master in ("local", "local[2]", "local[*]", "local[4,2]"):
-        assert local_streaming_conf(master)[manager] == _FS_CHECKPOINT_MANAGER
+        assert local_master_conf(master)[manager] == _FS_CHECKPOINT_MANAGER
     for master in ("yarn", "spark://host:7077", "k8s://https://host:443",
                    "local-cluster[2,1,1024]"):
-        conf = local_streaming_conf(master)
-        assert manager not in conf and partitions not in conf, master
+        conf = local_master_conf(master)
+        assert not {manager, partitions, uds, uds_dir} & set(conf), master
+
+    fits, too_long = "/s" * 30 + "x", "/s" * 30 + "xy"
+    assert (len(fits), len(too_long)) == (61, 62)
+    conf = local_master_conf("local[2]", fits)
+    assert (conf[uds], conf[uds_dir]) == ("true", fits)
+    assert capsys.readouterr().err == ""
+    conf = local_master_conf("local[2]", too_long)
+    assert uds not in conf and uds_dir not in conf
+    assert conf[manager] == _FS_CHECKPOINT_MANAGER
+    err = capsys.readouterr().err.splitlines()
+    assert len(err) == 1 and too_long in err[0] and "TCP" in err[0]
+    assert local_master_conf("yarn", too_long) == {}
+    assert capsys.readouterr().err == ""
+    # the default socket dir is the temp dir, as in the live session
+    tmp = tempfile.gettempdir()
+    if len(tmp) <= 61:
+        assert local_master_conf("local")[uds_dir] == tmp
+        sc_conf = spark.sparkContext.getConf()
+        assert (sc_conf.get(uds), sc_conf.get(uds_dir)) == ("true", tmp)
 
     assert spark.sparkContext.master.startswith("local")
     assert spark.conf.get(manager) == _FS_CHECKPOINT_MANAGER
