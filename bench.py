@@ -622,61 +622,19 @@ _FLAGSHIP_LEGS = {
 def _flagship_once(spark, chunks, label: str) -> dict:
     """Enqueue one chunk workload and time the queue -> sessionizer ->
     result-store pipeline end to end (min of 2 fresh runs)."""
-    from pyspark.sql import functions as F
-
-    from streamprocess_spark.io.queue_source import (
-        enqueue_job,
-        register_queue_source,
+    from streamprocess_spark.streaming.flagship import (
+        drain_and_stop,
+        enqueue_chunks,
+        start_flagship,
     )
-    from streamprocess_spark.io.result_sink import register_result_sink
     from streamprocess_spark.streaming.sessionizer import (
         DEFAULT_CONFIG,
         sessionize_batch,
-        sessionize_stream,
     )
 
     qdir = tempfile.mkdtemp(prefix="spbenchq_")
     expected_n = sessionize_batch(chunks, DEFAULT_CONFIG).count()
-
-    prios = ("realtime", "high", "normal", "low")
-    n_chunks = 0
-    for row in chunks.orderBy("session_id", "seq").toLocalIterator():
-        n_chunks += 1
-        enqueue_job(
-            qdir,
-            prios[int(row["session_id"]) % 4],
-            {
-                "job_id": f"{row['session_id']}-{row['seq']}",
-                "type": "stt_chunk",
-                "payload": {
-                    "seq": row["seq"],
-                    "offset_ms": row["offset_ms"],
-                    "is_final": row["is_final"],
-                    "samples": [float(x) for x in row["samples"]],
-                },
-            },
-        )
-
-    register_queue_source(spark)
-    register_result_sink(spark)
-    payload_schema = (
-        "seq long, offset_ms long, is_final boolean, samples array<float>"
-    )
-    jobs = spark.readStream.format("priority_queue").option("path", qdir).load()
-    chunk_stream = (
-        jobs.filter(F.col("type") == "stt_chunk")
-        .select(
-            F.split(F.col("job_id"), "-")[0].alias("session_id"),
-            F.from_json("payload", payload_schema).alias("p"),
-        )
-        .select("session_id", "p.seq", "p.offset_ms", "p.is_final", "p.samples")
-    )
-    segments = sessionize_stream(chunk_stream, DEFAULT_CONFIG).select(
-        F.concat_ws("_", "session_id", "start_offset_ms").alias("job_id"),
-        F.to_json(F.struct("segment_idx", "n_samples", "trigger")).alias(
-            "payload"
-        ),
-    )
+    n_chunks = enqueue_chunks(qdir, chunks)
 
     def _deliver():
         # Fresh result dir + checkpoint per run; the queue log is
@@ -685,13 +643,7 @@ def _flagship_once(spark, chunks, label: str) -> dict:
         # Timed: start to delivery of every expected segment.
         rdir = tempfile.mkdtemp(prefix="spbenchr_")
         ckpt = tempfile.mkdtemp(prefix="spbenchck_")
-        query = (
-            segments.writeStream.format("result_store")
-            .option("path", rdir)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="200 milliseconds")
-            .start()
-        )
+        query = start_flagship(spark, qdir, rdir, ckpt)
         try:
             deadline = time.time() + 300
             delivered = 0
@@ -712,29 +664,9 @@ def _flagship_once(spark, chunks, label: str) -> dict:
         return query, rdir, ckpt, delivered
 
     def _settle(run) -> tuple[int, int]:
-        # drain before stop (outside the timed region): stopping while
-        # a 200ms trigger is mid-flight aborts its micro-batch commit
-        # and leaves ERROR lines in an otherwise-clean bench.
-        # processAllAvailable() is NOT usable here — the sessionizer's
-        # processing-time idle-timeout (T8) keeps constructing
-        # timeout-only micro-batches, so the engine never reports
-        # noNewData (verified: epochs advance ~1.6s apart with zero
-        # input forever). Instead wait for an IDLE completed trigger
-        # (numInputRows == 0) and stop in the inter-trigger gap, so no
-        # batch is mid-commit when stop() lands.
+        # drain and stop outside the timed region
         query, rdir, ckpt, delivered = run
-        try:
-            drain_deadline = time.time() + 60
-            batches = 0
-            while time.time() < drain_deadline:
-                lp = query.lastProgress
-                if lp is not None:
-                    batches = int(lp.get("batchId", -1)) + 1
-                    if int(lp.get("numInputRows", -1)) == 0:
-                        break
-                time.sleep(0.05)
-        finally:
-            query.stop()
+        batches = drain_and_stop(query, ckpt, n_chunks, 60) or 0
         for d in (rdir, ckpt):
             shutil.rmtree(d, ignore_errors=True)
         return delivered, batches

@@ -1,5 +1,6 @@
-"""Unit coverage for bench.py's timing runner and run setup, plus a
-smoke run of the whole `python bench.py` entry point.
+"""Unit coverage for bench.py's timing runner and run setup, a smoke
+run of the whole `python bench.py` entry point, and one run of the
+flagship leg that the smoke run skips.
 
 The runner tests use fake thunks and a fake clock, so they need no
 Spark: every leg's pass policy (interleaving, min wins, every pass
@@ -16,7 +17,12 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from bench import _MIN_OF_2_CUTOFF_S, _sf_of, _time_passes  # noqa: E402
+from bench import (  # noqa: E402
+    _MIN_OF_2_CUTOFF_S,
+    _flagship_once,
+    _sf_of,
+    _time_passes,
+)
 from tests.conftest import SF_DIR  # noqa: E402
 
 
@@ -126,3 +132,21 @@ def test_bench_main_smoke(tmp_path):
     assert set(compact["queries"]) == bench_names
     assert "streaming" in compact
     assert compact["flagged"] == [], compact
+
+
+def test_flagship_leg_delivers_every_segment(spark):
+    """One bench flagship leg on a small workload: both passes deliver
+    every segment the batch sessionizer finds and record their
+    micro-batch counts."""
+    from streamprocess_spark.io.tables import load_tables
+    from streamprocess_spark.streaming.sessionizer import (
+        DEFAULT_CONFIG,
+        chunks_from_events,
+    )
+
+    ev = load_tables(spark, SF_DIR)["events"]
+    out = _flagship_once(
+        spark, chunks_from_events(ev, DEFAULT_CONFIG, max_users=6), "t")
+    assert out["segments"] == out["expected_segments"] > 0, out
+    assert len(out["runs"]) == 2, out
+    assert all(nb >= 1 for nb in out["nb"]), out

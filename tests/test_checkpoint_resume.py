@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from bench import _spark_conf
 from streamprocess_spark.schemas import EVENTS
 from streamprocess_spark.session import default_parallelism
+from streamprocess_spark.streaming.flagship import recorded_state_partitions
 from tests.conftest import SF_DIR
 
 STATE_PARTITIONS = "spark.sql.streaming.internal.stateStore.partitions"
@@ -97,7 +98,8 @@ def test_state_partition_count_is_frozen_into_the_checkpoint(spark):
     session's internal stateStore.partitions conf, not from the batch
     shuffle count, and records it in the offset log as the query's
     spark.sql.shuffle.partitions. A restart keeps the recorded count
-    whatever the session asks for. A Spark upgrade that drops or renames
+    whatever the session asks for, and the flagship's restart check
+    reads it back from the newest offset log. A Spark upgrade that drops or renames
     the internal conf fails the first half."""
     from streamprocess_spark.io.tables import table_path
 
@@ -121,5 +123,6 @@ def test_state_partition_count_is_frozen_into_the_checkpoint(spark):
             assert _run_counts(spark, src_dir, ckpt) == _batch_counts(ev)
         assert _state_partitions(ckpt) == [0, 1, 2]
         assert '"spark.sql.shuffle.partitions":"3"' in _offset_log_conf(ckpt, 1)
+        assert recorded_state_partitions(ckpt) == 3
     finally:
         shutil.rmtree(base, ignore_errors=True)

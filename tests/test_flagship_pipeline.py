@@ -19,13 +19,20 @@ import time
 
 from streamprocess_spark.io.result_sink import read_result
 from streamprocess_spark.io.tables import load_tables
+from pyspark.sql.types import StructType
+
+from streamprocess_spark.streaming import flagship
+from streamprocess_spark.streaming.flagship import (
+    PAYLOAD_COLUMNS,
+    enqueue_chunks,
+    start_flagship,
+)
 from streamprocess_spark.streaming.sessionizer import (
     DEFAULT_CONFIG,
     chunks_from_events,
     sessionize_batch,
 )
 from tests.conftest import SF_DIR
-from tests.flagship_query import PAYLOAD_COLUMNS, enqueue_chunks, start_query
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -52,7 +59,7 @@ def test_queue_to_sessionizer_to_result_store(spark, tmp_path):
     ev = load_tables(spark, SF_DIR)["events"]
     chunks = chunks_from_events(ev, DEFAULT_CONFIG, max_users=6)
     enqueue_chunks(qdir, chunks)
-    query = start_query(spark, qdir, rdir, ckpt)
+    query = start_flagship(spark, qdir, rdir, ckpt)
     try:
         expected = _expected(chunks)
         deadline = time.time() + 90
@@ -70,6 +77,15 @@ def test_queue_to_sessionizer_to_result_store(spark, tmp_path):
             assert got["trigger"] == exp["trigger"], key
     finally:
         query.stop()
+
+
+def test_benchmark_serves_the_shipped_trigger_and_payload(spark):
+    """perfbench keeps its own copy of the flagship wiring: serve_20
+    must measure the trigger and chunk payload that the product ships."""
+    from perfbench import streaming as serve
+
+    assert serve.TRIGGER == flagship.TRIGGER
+    assert StructType.fromDDL(serve.PAYLOAD_SCHEMA) == flagship.PAYLOAD_SCHEMA
 
 
 def _log_entries(ckpt: str, log: str) -> int:
@@ -99,8 +115,8 @@ def test_killed_pipeline_restarts_to_the_batch_answer(spark, tmp_path):
     expected = _expected(chunks)
     kill_at = random.Random(CRASH_SEED).randint(1, 4)
 
-    cmd = [sys.executable, "-m", "tests.flagship_query", "--queue", qdir,
-           "--results", rdir, "--ckpt", ckpt,
+    cmd = [sys.executable, "-m", "streamprocess_spark.streaming.flagship",
+           "--queue", qdir, "--results", rdir, "--ckpt", ckpt,
            "--max-records", str(CRASH_MAX_RECORDS)]
     env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
     log1 = str(tmp_path / "run1.log")

@@ -16,6 +16,7 @@ import pytest
 from pyspark.errors import StreamingQueryException
 
 from streamprocess_spark.io.tables import load_tables
+from streamprocess_spark.streaming.flagship import enqueue_chunks, start_flagship
 from streamprocess_spark.streaming.sessionizer import (
     CHUNK_SCHEMA,
     DEFAULT_CONFIG,
@@ -25,7 +26,6 @@ from streamprocess_spark.streaming.sessionizer import (
     sessionize_stream,
 )
 from tests.conftest import SF_DIR
-from tests.flagship_query import enqueue_chunks, start_query
 
 # batches after the warm-up batch whose compiles are counted
 MEASURED_BATCHES = 3
@@ -44,8 +44,8 @@ def test_flagship_state_encoder_is_compiled_once(spark, tmp_path):
     chunks = chunks_from_events(ev, DEFAULT_CONFIG, max_users=6)
     enqueue_chunks(str(tmp_path / "q"), chunks)
     # 24 queue lines per trigger: the ~380-line backlog spans ~16
-    query = start_query(spark, str(tmp_path / "q"), str(tmp_path / "r"),
-                        str(tmp_path / "ckpt"), max_records_per_batch=24)
+    query = start_flagship(spark, str(tmp_path / "q"), str(tmp_path / "r"),
+                           str(tmp_path / "ckpt"), max_records_per_batch=24)
     try:
         marks: list[tuple[int, int]] = []  # (batch id, compiles so far)
         deadline = time.time() + 120
