@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import json
 import os
+from typing import NamedTuple
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -75,7 +76,7 @@ def _scan_log(path: str, every: int) -> tuple[int, dict[int, int]]:
     not become an offset (the XADD analog is atomic).
 
     The index is what makes range-split scans linear: each
-    QueuePartition carries the byte offset of its chunk-grid anchor, so
+    QueueRange carries the byte offset of its chunk-grid anchor, so
     a task seeks instead of line-skipping the file prefix. Without it,
     L/chunk partitions each re-reading their prefix is O(L²/chunk)
     line reads per priority (round-10 advice)."""
@@ -137,11 +138,11 @@ def _read_lines(path: str, start: int, end: int,
     crashing the consumer — tests/unit/test_queue.py:183-222 there).
 
     Offsets are LINE counts (the contract the checkpoint persists).
-    When the partition carries a byte anchor (``anchor_line`` ≤ start
+    When the range carries a byte anchor (``anchor_line`` ≤ start
     with its ``anchor_byte``), the task seeks there and skips at most
     ``start - anchor_line`` lines — with chunk-grid-aligned splits
     that is < chunk lines, so a backlog of L lines costs O(L) total
-    I/O across all its partitions instead of O(L²/chunk). Without an
+    I/O across all its ranges instead of O(L²/chunk). Without an
     anchor (index unavailable) it degrades to the skip-from-zero scan.
     A broker-backed variant replaces this with an XRANGE cursor seek."""
     if not os.path.exists(path) or end <= start:
@@ -201,56 +202,92 @@ def _row(priority: str, seq: int, job: dict | None, raw: str = ""):
 # 4k rows is a few MB per batch)
 _ARROW_CHUNK = 4096
 
-# lines per INPUT PARTITION (round-10 flagship profiling): one
-# partition per priority caps scan parallelism at 4 whatever the
-# backlog — the flagship even leg's source stage ran 4 tasks of 2.1 s
-# each (the downstream from_json of the float payloads runs inside the
-# scan stage) while 28 cores idled. Each priority's range is split
-# into line-chunks so a deep backlog fans out across the cluster; a
-# broker-backed variant would map these to XRANGE cursors. Overridable
-# via the `read_partition_lines` option (0 = one partition per
-# priority, the pre-round-10 shape).
+# lines per INPUT PARTITION. Each priority's range is cut on a global
+# grid of this many lines, so a deep backlog fans out across the
+# cluster (one partition per priority capped the flagship even leg's
+# scan at 4 tasks of 2.1 s while 28 cores idled), and each piece's task
+# seeks to its grid anchor. Consecutive pieces, in realtime→low order,
+# are then packed into one partition while their total stays within
+# the same budget: a serve_20 trigger of ~120 lines over four
+# priorities is one read task, not four, each of which cost ~57 ms of
+# task launch and shuffle output for ~10 ms of Python. A broker-backed
+# variant would map each piece to an XRANGE cursor. The
+# `read_partition_lines` option overrides it; 0 means one partition
+# per priority, unsplit and unpacked.
 _READ_PARTITION_LINES = 512
 
 
-def _split_ranges(priority: str, start: int, end: int, path: str,
-                  chunk: int,
-                  index: dict[int, int] | None = None) -> list["QueuePartition"]:
-    """Split [start, end) into scan partitions ALIGNED TO THE GLOBAL
-    chunk grid (boundaries at multiples of ``chunk``), so every
-    sub-range start is a key of the every-``chunk``-lines byte index
-    and its task seeks straight to its data. Only the first sub-range
-    can start off-grid (at ``start`` itself); its task skips at most
-    chunk-1 lines from the preceding grid anchor."""
+class QueueRange(NamedTuple):
+    """Lines [start, end) of one priority log. ``anchor_byte`` is the
+    byte position of line ``anchor_line`` (≤ start), or -1/-1 when no
+    index was available at planning time: the reader then skips lines
+    from the top of the log."""
+    priority: str
+    start: int
+    end: int
+    anchor_line: int = -1
+    anchor_byte: int = -1
+
+
+class QueuePartition(InputPartition):
+    """One read task: ``ranges`` of the logs under ``path``, read in
+    order."""
+
+    def __init__(self, path: str, ranges: list[QueueRange] | None = None):
+        self.path = path
+        self.ranges = ranges or []
+
+
+def _split_ranges(priority: str, start: int, end: int, chunk: int,
+                  index: dict[int, int] | None = None) -> list[QueueRange]:
+    """Split [start, end) into ranges ALIGNED TO THE GLOBAL chunk grid
+    (boundaries at multiples of ``chunk``), so every range start is a
+    key of the every-``chunk``-lines byte index and its task seeks
+    straight to its data. Only the first range can start off-grid (at
+    ``start`` itself); its task skips at most chunk-1 lines from the
+    preceding grid anchor."""
     if end <= start:
         return []
-    if chunk <= 0:
-        return [_with_anchor(QueuePartition(priority, start, end, path), chunk, index)]
     bounds = [start]
-    g = (start // chunk + 1) * chunk
-    while g < end:
-        bounds.append(g)
-        g += chunk
+    if chunk > 0:
+        bounds.extend(range((start // chunk + 1) * chunk, end, chunk))
     bounds.append(end)
     return [
-        _with_anchor(QueuePartition(priority, bounds[i], bounds[i + 1], path),
+        _with_anchor(QueueRange(priority, bounds[i], bounds[i + 1]),
                      chunk, index)
         for i in range(len(bounds) - 1)
     ]
 
 
-def _with_anchor(part: "QueuePartition", chunk: int,
-                 index: dict[int, int] | None) -> "QueuePartition":
+def _with_anchor(r: QueueRange, chunk: int,
+                 index: dict[int, int] | None) -> QueueRange:
     """Attach the byte offset of the largest indexed line ≤ start."""
     if index:
         step = chunk if chunk > 0 else 1
-        anchor = (part.start // step) * step if chunk > 0 else 0
+        anchor = (r.start // step) * step if chunk > 0 else 0
         while anchor >= 0 and anchor not in index:
             anchor -= step
         if anchor >= 0:
-            part.anchor_line = anchor
-            part.anchor_byte = index[anchor]
-    return part
+            return r._replace(anchor_line=anchor, anchor_byte=index[anchor])
+    return r
+
+
+def _pack(path: str, ranges: list[QueueRange],
+          chunk: int) -> list[QueuePartition]:
+    """Group consecutive ``ranges`` into partitions of at most
+    ``chunk`` lines in total (a range is never cut here; ``_split_ranges``
+    already keeps each within ``chunk``). ``chunk`` ≤ 0 gives one
+    partition per range. Never returns an empty list: the engine
+    requires at least one partition."""
+    parts: list[QueuePartition] = []
+    lines = 0
+    for r in ranges:
+        if not parts or chunk <= 0 or lines + r.end - r.start > chunk:
+            parts.append(QueuePartition(path))
+            lines = 0
+        parts[-1].ranges.append(r)
+        lines += r.end - r.start
+    return parts or [QueuePartition(path)]
 
 
 def _arrow_schema():
@@ -278,36 +315,20 @@ def _rows_to_batch(rows: list[tuple]):
     )
 
 
-def _read_arrow(partition: "QueuePartition"):
+def _read_arrow(partition: QueuePartition):
     """Partition scan as RecordBatches — the values are exactly the
-    `_row` tuples, chunked columnar."""
-    log = _log_path(partition.path, partition.priority)
+    `_row` tuples of its ranges in order, chunked columnar."""
     rows: list[tuple] = []
-    for seq, job, raw in _read_lines(
-        log, partition.start, partition.end,
-        getattr(partition, "anchor_line", -1),
-        getattr(partition, "anchor_byte", -1),
-    ):
-        rows.append(_row(partition.priority, seq, job, raw))
-        if len(rows) >= _ARROW_CHUNK:
-            yield _rows_to_batch(rows)
-            rows = []
+    for r in partition.ranges:
+        log = _log_path(partition.path, r.priority)
+        for seq, job, raw in _read_lines(log, r.start, r.end,
+                                         r.anchor_line, r.anchor_byte):
+            rows.append(_row(r.priority, seq, job, raw))
+            if len(rows) >= _ARROW_CHUNK:
+                yield _rows_to_batch(rows)
+                rows = []
     if rows:
         yield _rows_to_batch(rows)
-
-
-class QueuePartition(InputPartition):
-    def __init__(self, priority: str, start: int, end: int, path: str,
-                 anchor_line: int = -1, anchor_byte: int = -1):
-        self.priority = priority
-        self.start = start
-        self.end = end
-        self.path = path
-        # byte position of line `anchor_line` (≤ start) in the log, or
-        # -1/-1 when no index was available at planning time — the
-        # reader then falls back to skip-from-zero
-        self.anchor_line = anchor_line
-        self.anchor_byte = anchor_byte
 
 
 class PriorityQueueBatchReader(DataSourceReader):
@@ -320,15 +341,11 @@ class PriorityQueueBatchReader(DataSourceReader):
         )
 
     def partitions(self):
-        parts = []
+        ranges = []
         for p in PRIORITIES:
             n, index = _scan_log(_log_path(self.path, p), self.chunk)
-            parts.extend(
-                _split_ranges(p, 0, n, self.path, self.chunk, index)
-            )
-        # at least one (possibly empty) partition — the engine requires
-        # a non-empty partition list
-        return parts or [QueuePartition(PRIORITIES[0], 0, 0, self.path)]
+            ranges.extend(_split_ranges(p, 0, n, self.chunk, index))
+        return _pack(self.path, ranges, self.chunk)
 
     def read(self, partition: QueuePartition):
         yield from _read_arrow(partition)
@@ -415,15 +432,16 @@ class PriorityQueueStreamReader(DataSourceStreamReader):
             for p in PRIORITIES
         }
         # realtime first — batch-local priority drain order (R2);
-        # each priority's range further line-split for scan parallelism
-        return [
-            sub
+        # each priority's range cut on the grid, small pieces packed
+        ranges = [
+            r
             for p in PRIORITIES
-            for sub in _split_ranges(
-                p, int(start.get(p, 0)), int(end.get(p, 0)), self.path,
-                self.chunk, self._priority_index(p),
+            for r in _split_ranges(
+                p, int(start.get(p, 0)), int(end.get(p, 0)), self.chunk,
+                self._priority_index(p),
             )
-        ] or [QueuePartition(PRIORITIES[0], 0, 0, self.path)]
+        ]
+        return _pack(self.path, ranges, self.chunk)
 
     def read(self, partition: QueuePartition):
         yield from _read_arrow(partition)

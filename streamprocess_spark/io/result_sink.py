@@ -19,7 +19,10 @@ Reference semantics reproduced (src/queue/redis_queue.py):
     micro-batch boundary stays observable; `abort()` keeps completed
     upserts (idempotent keyed overwrites, exactly what a crashed
     reference worker leaves) and sweeps orphaned tmp spool files, so
-    every file that survives an abort is a well-formed result.
+    every file that survives an abort is a well-formed result. Spool
+    files live in `<path>/_tmp/`, on the same filesystem as the
+    results (the rename stays one rename(2)), so the per-trigger sweep
+    lists only the spool, never the whole store.
   - `wait_for_result`: poll every 100 ms until hit or timeout
     (`redis_queue.py:329-344`) → :func:`wait_for_result`.
   - TTL expiry / stream trimming (`redis_queue.py:49-51,382-397`) →
@@ -51,6 +54,10 @@ def _result_path(path: str, job_id: str) -> str:
     return os.path.join(path, f"result-{job_id}.json")
 
 
+def _spool_dir(path: str) -> str:
+    return os.path.join(path, "_tmp")
+
+
 @dataclass
 class ResultCommitMessage(WriterCommitMessage):
     n_written: int = 0
@@ -62,7 +69,7 @@ class ResultStoreStreamWriter(DataSourceStreamArrowWriter):
         self.ttl_s = float(options.get("ttl_s", DEFAULT_TTL_S))
 
     def write(self, iterator) -> ResultCommitMessage:
-        os.makedirs(self.path, exist_ok=True)
+        os.makedirs(_spool_dir(self.path), exist_ok=True)
         n = 0
         # iterator of pyarrow RecordBatches; to_pylist() gives the same
         # nested dicts Row.asDict(recursive=True) produced
@@ -79,7 +86,8 @@ class ResultStoreStreamWriter(DataSourceStreamArrowWriter):
             "expires_at": time.time() + self.ttl_s,
         }
         final = _result_path(self.path, job_id)
-        tmp = f"{final}.tmp.{os.getpid()}"
+        tmp = os.path.join(_spool_dir(self.path),
+                           f"{os.path.basename(final)}.tmp.{os.getpid()}")
         with open(tmp, "w") as f:
             json.dump(doc, f, sort_keys=True)
         try:
@@ -103,7 +111,7 @@ class ResultStoreStreamWriter(DataSourceStreamArrowWriter):
         # re-sweep tmps a straggler of an ABORTED earlier epoch may
         # have recreated after that epoch's abort() pass; age-gated so
         # this epoch's own in-flight spool files are never touched
-        self._sweep_tmp(self.path, older_than_s=60.0)
+        self._sweep_tmp(_spool_dir(self.path), older_than_s=60.0)
 
     def abort(self, messages, batchId: int) -> None:
         # completed upserts are harmless (keyed overwrite == SETEX;
@@ -112,7 +120,10 @@ class ResultStoreStreamWriter(DataSourceStreamArrowWriter):
         # are swept. The sweep is BEST-EFFORT: a straggler task still
         # running when the driver aborts can recreate a tmp file after
         # this pass (its own rename then fails loudly, see write()),
-        # so commit() of the next epoch re-sweeps stale tmps too.
+        # so commit() of the next epoch re-sweeps stale tmps too. The
+        # store root is swept as well, for spool files written there
+        # before the spool had its own dir.
+        self._sweep_tmp(_spool_dir(self.path))
         self._sweep_tmp(self.path)
 
     @staticmethod

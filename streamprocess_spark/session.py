@@ -18,8 +18,12 @@ on local[N]):
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
 import re
+import shutil
+import subprocess
 import sys
 import tempfile
 import zipfile
@@ -154,6 +158,19 @@ def get_spark(
 #     checkpoint's spark.sql.shuffle.partitions; a restarted query
 #     keeps the recorded count whatever the session says, because
 #     state is partitioned by it.
+#   - Permissions set in-process (NioLocalFileSystem.java). Without
+#     libhadoop, Hadoop's RawLocalFileSystem.setPermission runs a
+#     `chmod` process for every file it creates with a permission:
+#     each checkpoint file, its .crc, Spark's checksum sidecar and that
+#     sidecar's .crc, about 20 per trigger, and the state tasks waited
+#     on them. fs.file.impl swaps in a LocalFileSystem whose raw
+#     filesystem sets the same rwx bits through java.nio; files,
+#     sidecars and renames are otherwise Hadoop's. The class is
+#     compiled with javac before the JVM starts, once per source hash,
+#     into a jar in the temp dir, and goes on the driver's classpath,
+#     which in local mode is every executor's. With no javac, or a
+#     failed compile, the session keeps Hadoop's filesystem and says so
+#     in one stderr line.
 #   - Python workers over Unix domain sockets. Spark's loopback TCP
 #     sockets to its workers do not set TCP_NODELAY, and in most
 #     Python tasks of a streaming trigger the worker waited 37-45 ms
@@ -170,6 +187,9 @@ _FS_CHECKPOINT_MANAGER = (
     "FileSystemBasedCheckpointFileManager"
 )
 _UDS_DIR_MAX_CHARS = 61
+_NIO_FS_CLASS = "streamprocess_spark.NioLocalFileSystem"
+_NIO_FS_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                              "NioLocalFileSystem.java")
 
 
 def local_master_conf(master: str, sock_dir: str | None = None) -> dict[str, str]:
@@ -177,7 +197,9 @@ def local_master_conf(master: str, sock_dir: str | None = None) -> dict[str, str
     local-mode defaults above for ``local`` / ``local[...]``, and none
     for any other master. ``sock_dir`` (default: the temp dir) holds
     the Python workers' Unix sockets; when it is longer than Spark
-    allows, workers stay on TCP and one line on stderr says so."""
+    allows, workers stay on TCP and one line on stderr says so. When
+    NioLocalFileSystem cannot be built, local files keep Hadoop's
+    filesystem, again with one stderr line."""
     if not re.fullmatch(r"local(\[.*\])?", master):
         return {}
     conf = {
@@ -185,6 +207,13 @@ def local_master_conf(master: str, sock_dir: str | None = None) -> dict[str, str
         "spark.sql.streaming.internal.stateStore.partitions":
             str(default_parallelism()),
     }
+    jar, why_not = _nio_fs_jar()
+    if jar:
+        conf["spark.driver.extraClassPath"] = jar
+        conf["spark.hadoop.fs.file.impl"] = _NIO_FS_CLASS
+    else:
+        print(f"[session] {why_not}; Hadoop's local filesystem runs chmod "
+              "per created file", file=sys.stderr)
     sock_dir = sock_dir or tempfile.gettempdir()
     if len(sock_dir) <= _UDS_DIR_MAX_CHARS:
         conf["spark.python.unix.domain.socket.enabled"] = "true"
@@ -193,6 +222,54 @@ def local_master_conf(master: str, sock_dir: str | None = None) -> dict[str, str
         print(f"[session] temp dir longer than {_UDS_DIR_MAX_CHARS} chars "
               f"({sock_dir}); Python workers use TCP", file=sys.stderr)
     return conf
+
+
+def _find_javac() -> str | None:
+    """The javac of the JDK that Spark's launcher runs: $JAVA_HOME's,
+    else the first on PATH."""
+    home = os.environ.get("JAVA_HOME")
+    if home and os.access(os.path.join(home, "bin", "javac"), os.X_OK):
+        return os.path.join(home, "bin", "javac")
+    return shutil.which("javac")
+
+
+def _nio_fs_jar() -> tuple[str | None, str]:
+    """``(jar, "")`` with the compiled NioLocalFileSystem, built on
+    first use into the temp dir under the source's hash; ``(None,
+    reason)`` when it cannot be built. Concurrent sessions each compile
+    into their own dir and rename a finished jar into place."""
+    with open(_NIO_FS_SOURCE, "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()[:16]
+    jar = os.path.join(tempfile.gettempdir(),
+                       f"streamprocess_spark_nio_fs_{digest}.jar")
+    if os.path.exists(jar):
+        return jar, ""
+    javac = _find_javac()
+    if javac is None:
+        return None, "no javac found"
+    from pyspark.find_spark_home import _find_spark_home
+
+    api = glob.glob(os.path.join(_find_spark_home(), "jars",
+                                 "hadoop-client-api-*.jar"))
+    if not api:
+        return None, "no hadoop-client-api jar to compile against"
+    with tempfile.TemporaryDirectory() as out:
+        r = subprocess.run([javac, "-nowarn", "-cp", api[0], "-d", out,
+                            _NIO_FS_SOURCE], capture_output=True, text=True)
+        if r.returncode != 0:
+            # the JVM echoes JAVA_TOOL_OPTIONS first; skip to the error
+            err = [ln for ln in r.stderr.splitlines()
+                   if ln.strip() and not ln.startswith("Picked up ")]
+            return None, (f"javac failed on {_NIO_FS_SOURCE}: "
+                          f"{err[0] if err else f'exit {r.returncode}'}")
+        tmp = f"{jar}.tmp.{os.getpid()}"
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for root, _dirs, files in os.walk(out):
+                for fn in files:
+                    full = os.path.join(root, fn)
+                    zf.write(full, os.path.relpath(full, out))
+        os.replace(tmp, jar)
+    return jar, ""
 
 
 # RocksDB state-store deployment profile. Stage attribution of the
@@ -248,7 +325,6 @@ def _prewarmed_daemon_usable() -> bool:
     global _DAEMON_PROBE
     if _DAEMON_PROBE is not None:
         return _DAEMON_PROBE
-    import subprocess
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     site_dir = os.path.join(pkg_dir, "worker_site")

@@ -12,7 +12,9 @@ import contextlib
 import json
 import os
 import random
+import shutil
 import signal
+import stat
 import subprocess
 import sys
 import time
@@ -98,6 +100,36 @@ def _log_tail(path: str) -> str:
         return f.read()[-3000:]
 
 
+def _chmod_shim(tmp_path) -> tuple[str, str]:
+    """A `chmod` that logs its arguments and runs the real one:
+    returns (dir to put first on PATH, log file)."""
+    shim, log = tmp_path / "shim", tmp_path / "chmod.log"
+    shim.mkdir()
+    (shim / "chmod").write_text(
+        f'#!/bin/sh\necho "$@" >> {log}\nexec {shutil.which("chmod")} "$@"\n')
+    (shim / "chmod").chmod(0o755)
+    return str(shim), str(log)
+
+
+def _assert_checkpoint_files(ckpt: str) -> None:
+    """Under umask 022: dirs 0755, files 0644; every offset and commit
+    file has Hadoop's .crc, and every state delta also Spark's checksum
+    sidecar with its own .crc."""
+    deltas = 0
+    for root, dirs, files in os.walk(ckpt):
+        for d in dirs:
+            assert stat.S_IMODE(os.stat(os.path.join(root, d)).st_mode) == 0o755
+        for f in files:
+            assert stat.S_IMODE(
+                os.stat(os.path.join(root, f)).st_mode) == 0o644, (root, f)
+            if f.isdigit():
+                assert f".{f}.crc" in files, (root, f)
+            elif f.endswith(".delta"):
+                deltas += 1
+                assert {f".{f}.crc", f"{f}.crc", f".{f}.crc.crc"} <= set(files)
+    assert deltas > 0
+
+
 def test_killed_pipeline_restarts_to_the_batch_answer(spark, tmp_path):
     """SIGKILL the serving process's whole process group inside the
     trigger after a seeded number of committed ones, restart a fresh
@@ -105,7 +137,8 @@ def test_killed_pipeline_restarts_to_the_batch_answer(spark, tmp_path):
     sessionizer's segments:
     every key once with its payload, no extra key, no temp or torn
     file, and every segment counted by exactly one committed sink
-    batch."""
+    batch. Neither process runs a `chmod` process for a checkpoint
+    file, and the checkpoint keeps Hadoop's modes and checksums."""
     qdir = str(tmp_path / "q")
     rdir = str(tmp_path / "r")
     ckpt = str(tmp_path / "ckpt")
@@ -118,12 +151,14 @@ def test_killed_pipeline_restarts_to_the_batch_answer(spark, tmp_path):
     cmd = [sys.executable, "-m", "streamprocess_spark.streaming.flagship",
            "--queue", qdir, "--results", rdir, "--ckpt", ckpt,
            "--max-records", str(CRASH_MAX_RECORDS)]
-    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    shim, chmod_log = _chmod_shim(tmp_path)
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g",
+               PATH=shim + os.pathsep + os.environ.get("PATH", ""))
     log1 = str(tmp_path / "run1.log")
     with open(log1, "w") as out:
         proc = subprocess.Popen(cmd, cwd=REPO, env=env, stdout=out,
                                 stderr=subprocess.STDOUT,
-                                start_new_session=True)
+                                start_new_session=True, umask=0o022)
     try:
         # kill mid-trigger: the next batch is in the offset log but not
         # yet committed, so the restart must re-run it
@@ -144,7 +179,7 @@ def test_killed_pipeline_restarts_to_the_batch_answer(spark, tmp_path):
     with open(log2, "w") as out:
         rc = subprocess.run(cmd + ["--lines", str(n_lines)], cwd=REPO,
                             env=env, stdout=out, stderr=subprocess.STDOUT,
-                            timeout=300).returncode
+                            timeout=300, umask=0o022).returncode
     assert rc == 0, _log_tail(log2)
 
     files = os.listdir(rdir)
@@ -170,3 +205,7 @@ def test_killed_pipeline_restarts_to_the_batch_answer(spark, tmp_path):
         with open(os.path.join(rdir, "_commits", marker)) as fh:
             written += json.load(fh)["n_written"]
     assert written == len(expected), (written, len(expected))
+
+    calls = open(chmod_log).read().splitlines() if os.path.exists(chmod_log) else []
+    assert not [c for c in calls if ckpt in c], calls[:5]
+    _assert_checkpoint_files(ckpt)

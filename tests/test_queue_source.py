@@ -474,11 +474,11 @@ def test_arrow_read_path_matches_row_contract(tmp_path):
     with open(_log_path(qdir, "high"), "a") as f:
         f.write("not json\n")
 
-    parts = _split_ranges("high", 0, 26, qdir, chunk=10)
+    parts = _split_ranges("high", 0, 26, chunk=10)
     assert [(p.start, p.end) for p in parts] == [(0, 10), (10, 20), (20, 26)]
     got = []
     for p in parts:
-        for rb in _read_arrow(p):
+        for rb in _read_arrow(QueuePartition(qdir, [p])):
             assert isinstance(rb, pa.RecordBatch)
             got.extend(tuple(r.values()) for r in rb.to_pylist())
     ref = [
@@ -486,7 +486,7 @@ def test_arrow_read_path_matches_row_contract(tmp_path):
         for seq, job, raw in _read_lines(_log_path(qdir, "high"), 0, 26)
     ]
     assert got == ref and len(got) == 26
-    assert list(_read_arrow(QueuePartition("low", 0, 0, qdir))) == []
+    assert list(_read_arrow(QueuePartition(qdir))) == []
 
 
 def test_byte_index_seek_matches_skip_scan(tmp_path):
@@ -519,7 +519,7 @@ def test_byte_index_seek_matches_skip_scan(tmp_path):
         assert off == 0 or data[off - 1] == ord("\n")
 
     # off-grid start (restart at line 13): splits align to the grid
-    parts = _split_ranges("normal", 13, 57, qdir, chunk=10, index=index)
+    parts = _split_ranges("normal", 13, 57, chunk=10, index=index)
     assert [(p.start, p.end) for p in parts] == [
         (13, 20), (20, 30), (30, 40), (40, 50), (50, 57)]
     assert [(p.anchor_line) for p in parts] == [10, 20, 30, 40, 50]
@@ -544,3 +544,96 @@ def test_byte_index_seek_matches_skip_scan(tmp_path):
     via_seek = [(s, j) for s, j, _ in _read_lines(
         mutated, p.start, p.end, p.anchor_line, p.anchor_byte)]
     assert via_seek == [(s, j) for s, j, _ in _read_lines(log, 20, 30)]
+
+
+def _plan(qdir: str, lines: int | None, start: dict | None = None):
+    from streamprocess_spark.io.queue_source import PriorityQueueStreamReader
+
+    opts = {"path": qdir}
+    if lines is not None:
+        opts["read_partition_lines"] = str(lines)
+    reader = PriorityQueueStreamReader(opts)
+    end = reader.latestOffset()
+    start = start or {p: 0 for p in PRIORITIES}
+    return reader, end, reader.partitions(start, end)
+
+
+def _rows(reader, parts) -> list[tuple]:
+    return [tuple(r.values()) for part in parts
+            for rb in reader.read(part) for r in rb.to_pylist()]
+
+
+def _ref_rows(qdir: str, start: dict, end: dict) -> list[tuple]:
+    from streamprocess_spark.io.queue_source import _log_path, _read_lines, _row
+
+    return [_row(p, seq, job, raw)
+            for p in PRIORITIES
+            for seq, job, raw in _read_lines(_log_path(qdir, p),
+                                             start[p], end[p])]
+
+
+def test_small_priority_ranges_pack_into_one_read_partition(tmp_path):
+    """A trigger's few lines across all four priorities are one read
+    task, and it yields exactly the unpacked ranges' rows in the
+    realtime→low drain order."""
+    qdir = str(tmp_path / "q")
+    _seed(qdir, n_per_prio=30)
+    start = {"realtime": 0, "high": 7, "normal": 29, "low": 3}
+    reader, end, parts = _plan(qdir, None, start)
+    assert len(parts) == 1
+    assert [(r.priority, r.start, r.end) for r in parts[0].ranges] == [
+        ("realtime", 0, 30), ("high", 7, 30), ("normal", 29, 30),
+        ("low", 3, 30)]
+    got = _rows(reader, parts)
+    assert got == _ref_rows(qdir, start, end) and len(got) == 81
+    _, _, unpacked = _plan(qdir, 0, start)
+    assert len(unpacked) == 4 and _rows(reader, unpacked) == got
+
+
+def test_large_ranges_keep_the_grid_split(tmp_path):
+    """Ranges of at least ``chunk`` lines stay cut on the global grid,
+    no partition holds more than ``chunk`` lines, and packing only
+    joins neighbours: the rows read are the unpacked ranges' rows."""
+    from streamprocess_spark.io.queue_source import PriorityQueueBatchReader
+
+    qdir = str(tmp_path / "q")
+    _seed(qdir, n_per_prio=4)
+    for i in range(4, 27):
+        enqueue_job(qdir, "high", {"job_id": f"high-{i}", "type": "t"})
+    start = {"realtime": 1, "high": 3, "normal": 0, "low": 0}
+    reader, end, parts = _plan(qdir, 10, start)
+    assert end == {"realtime": 4, "high": 27, "normal": 4, "low": 4}
+    assert [[(r.priority, r.start, r.end) for r in p.ranges] for p in parts] == [
+        [("realtime", 1, 4), ("high", 3, 10)],
+        [("high", 10, 20)],
+        [("high", 20, 27)],
+        [("normal", 0, 4), ("low", 0, 4)],
+    ]
+    for p in parts:
+        assert sum(r.end - r.start for r in p.ranges) <= 10
+        assert all(r.start % 10 == 0 for r in p.ranges
+                   if r.priority == "high" and r.start != 3)
+    assert _rows(reader, parts) == _ref_rows(qdir, start, end)
+
+    batch = PriorityQueueBatchReader({"path": qdir,
+                                      "read_partition_lines": "10"})
+    bparts = batch.partitions()
+    assert max(sum(r.end - r.start for r in p.ranges) for p in bparts) <= 10
+    assert _rows(batch, bparts) == _ref_rows(
+        qdir, {p: 0 for p in PRIORITIES}, end)
+
+
+def test_zero_read_partition_lines_keeps_one_partition_per_priority(tmp_path):
+    qdir = str(tmp_path / "q")
+    _seed(qdir, n_per_prio=600)
+    start = {p: 0 for p in PRIORITIES}
+    reader, end, parts = _plan(qdir, 0, start)
+    assert [[(r.priority, r.start, r.end) for r in p.ranges] for p in parts] == [
+        [(p, 0, 600)] for p in PRIORITIES]
+    assert _rows(reader, parts) == _ref_rows(qdir, start, end)
+    # at the default 512-line budget each priority splits at line 512,
+    # and no 88-line tail fits beside the next priority's 512 lines
+    _, _, default = _plan(qdir, None, start)
+    assert [(r.start, r.end) for p in default for r in p.ranges] == [
+        (0, 512), (512, 600)] * 4
+    assert all(len(p.ranges) == 1 for p in default)

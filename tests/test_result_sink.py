@@ -107,3 +107,36 @@ def test_abort_sweeps_tmp_keeps_results(tmp_path):
     for fn in os.listdir(store):
         if fn.startswith("result-"):
             json.load(open(os.path.join(store, fn)))
+
+
+def test_commit_sweeps_only_the_spool_dir(tmp_path, monkeypatch):
+    """A trigger's commit lists the spool dir, never the store root
+    (which grows by one file per result), and still sweeps a stale
+    spool file while keeping a fresh one."""
+    import pyarrow as pa
+
+    from streamprocess_spark.io.result_sink import ResultStoreStreamWriter
+
+    store = str(tmp_path / "r")
+    spool = os.path.join(store, "_tmp")
+    w = ResultStoreStreamWriter({"path": store})
+    w.write(iter([pa.RecordBatch.from_pylist([{"job_id": "a", "x": 1}])]))
+    assert os.listdir(spool) == [] and read_result(store, "a") is not None
+    stale = os.path.join(spool, "result-b.json.tmp.1")
+    fresh = os.path.join(spool, "result-c.json.tmp.1")
+    for fn in (stale, fresh):
+        open(fn, "w").close()
+    os.utime(stale, (time.time() - 600,) * 2)
+
+    listed = []
+    real_listdir, real_scandir = os.listdir, os.scandir
+    monkeypatch.setattr(os, "listdir",
+                        lambda p=".": listed.append(p) or real_listdir(p))
+    monkeypatch.setattr(os, "scandir",
+                        lambda p=".": listed.append(p) or real_scandir(p))
+    w.commit([], batchId=0)
+    monkeypatch.undo()
+
+    assert store not in listed and os.path.join(store, "") not in listed
+    assert spool in listed
+    assert os.listdir(spool) == ["result-c.json.tmp.1"]

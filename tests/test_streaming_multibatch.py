@@ -169,16 +169,23 @@ def test_autoscaler_state_continues_across_microbatches(spark, tmp_path):
     assert list(got["replicas"]) == list(want["replicas"]) == [5, 5, 5, 1]
 
 
-def test_local_master_gets_filesystem_checkpoint_manager(spark, capsys):
+def test_local_master_gets_filesystem_checkpoint_manager(
+        spark, capsys, monkeypatch, tmp_path):
     """A local-mode session commits checkpoints through Spark's
-    FileSystem-based manager with checksums left on, and talks to its
+    FileSystem-based manager with checksums left on, sets local file
+    permissions in-process (Hadoop's filesystem, saying so once on
+    stderr, when the class cannot be compiled), and talks to its
     Python workers over Unix sockets when the socket dir fits Spark's
     61-char cap (else over TCP, saying so once on stderr); any other
     master gets none of the local-mode confs."""
+    import os
+    import stat
     import tempfile
 
+    from streamprocess_spark import session
     from streamprocess_spark.session import (
         _FS_CHECKPOINT_MANAGER,
+        _NIO_FS_CLASS,
         local_master_conf,
     )
 
@@ -187,12 +194,18 @@ def test_local_master_gets_filesystem_checkpoint_manager(spark, capsys):
     checksum = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
     uds = "spark.python.unix.domain.socket.enabled"
     uds_dir = "spark.python.unix.domain.socket.dir"
+    fs_impl = "spark.hadoop.fs.file.impl"
+    classpath = "spark.driver.extraClassPath"
     for master in ("local", "local[2]", "local[*]", "local[4,2]"):
-        assert local_master_conf(master)[manager] == _FS_CHECKPOINT_MANAGER
+        conf = local_master_conf(master)
+        assert conf[manager] == _FS_CHECKPOINT_MANAGER
+        assert conf[fs_impl] == _NIO_FS_CLASS
+        assert conf[classpath].endswith(".jar") and os.path.isfile(conf[classpath])
     for master in ("yarn", "spark://host:7077", "k8s://https://host:443",
                    "local-cluster[2,1,1024]"):
         conf = local_master_conf(master)
-        assert not {manager, partitions, uds, uds_dir} & set(conf), master
+        assert not {manager, partitions, uds, uds_dir, fs_impl,
+                    classpath} & set(conf), master
 
     fits, too_long = "/s" * 30 + "x", "/s" * 30 + "xy"
     assert (len(fits), len(too_long)) == (61, 62)
@@ -219,3 +232,32 @@ def test_local_master_gets_filesystem_checkpoint_manager(spark, capsys):
     assert spark.conf.get(checksum, "true") != "false"
     assert dict(spark.sparkContext.getConf().getAll()).get(
         checksum, "true") != "false"
+
+    # no javac and no cached jar: Hadoop's filesystem, one stderr line
+    capsys.readouterr()
+    with monkeypatch.context() as m:
+        m.setattr(tempfile, "tempdir", str(tmp_path))
+        m.setattr(session, "_find_javac", lambda: None)
+        conf = local_master_conf("local[2]", fits)
+    assert not {fs_impl, classpath} & set(conf)
+    assert conf[manager] == _FS_CHECKPOINT_MANAGER
+    err = capsys.readouterr().err.splitlines()
+    assert len(err) == 1 and err[0].startswith("[session]") and "javac" in err[0]
+
+    # the live session resolves file:/// to the product's filesystem,
+    # whose setPermission leaves the mode os.chmod would
+    jvm = spark.sparkContext._jvm
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
+        jvm.java.net.URI("file:///"),
+        spark.sparkContext._jsc.hadoopConfiguration())
+    assert fs.getClass().getName() == _NIO_FS_CLASS
+    via_hadoop, via_os = tmp_path / "a", tmp_path / "b"
+    for f in (via_hadoop, via_os):
+        f.write_text("x")
+        f.chmod(0o600)
+    fs.setPermission(jvm.org.apache.hadoop.fs.Path(str(via_hadoop)),
+                     jvm.org.apache.hadoop.fs.permission.FsPermission
+                     .valueOf("-rw-r--r--"))
+    os.chmod(via_os, 0o644)
+    assert stat.S_IMODE(via_hadoop.stat().st_mode) == stat.S_IMODE(
+        via_os.stat().st_mode) == 0o644
