@@ -18,11 +18,13 @@ on local[N]):
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import hashlib
 import os
 import re
 import shutil
+import stat
 import subprocess
 import sys
 import tempfile
@@ -166,11 +168,13 @@ def get_spark(
 #     on them. fs.file.impl swaps in a LocalFileSystem whose raw
 #     filesystem sets the same rwx bits through java.nio; files,
 #     sidecars and renames are otherwise Hadoop's. The class is
-#     compiled with javac before the JVM starts, once per source hash,
-#     into a jar in the temp dir, and goes on the driver's classpath,
-#     which in local mode is every executor's. With no javac, or a
-#     failed compile, the session keeps Hadoop's filesystem and says so
-#     in one stderr line.
+#     compiled with javac --release 17 before the JVM starts, once per
+#     source hash, into a jar in a 0700 dir of this user's under the
+#     temp dir, and goes on the driver's classpath, which in local mode
+#     is every executor's. A jar or dir that another user could have
+#     written is never put on the classpath. With no javac, a failed
+#     compile or no private cache dir, the session keeps Hadoop's
+#     filesystem and says so in one stderr line.
 #   - Python workers over Unix domain sockets. Spark's loopback TCP
 #     sockets to its workers do not set TCP_NODELAY, and in most
 #     Python tasks of a streaming trigger the worker waited 37-45 ms
@@ -190,6 +194,9 @@ _UDS_DIR_MAX_CHARS = 61
 _NIO_FS_CLASS = "streamprocess_spark.NioLocalFileSystem"
 _NIO_FS_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                               "NioLocalFileSystem.java")
+# bytecode level of the compiled class: Spark 4's minimum Java, so a
+# newer javac than the JVM that Spark runs still emits a loadable class
+_JAVA_RELEASE = "17"
 
 
 def local_master_conf(master: str, sock_dir: str | None = None) -> dict[str, str]:
@@ -233,16 +240,36 @@ def _find_javac() -> str | None:
     return shutil.which("javac")
 
 
+def _private(path: str, is_type) -> bool:
+    """``path`` itself (not a symlink's target) is of the given type,
+    owned by this user and writable by no one else."""
+    try:
+        st = os.lstat(path)
+    except FileNotFoundError:
+        return False
+    return (is_type(st.st_mode) and st.st_uid == os.getuid()
+            and not st.st_mode & 0o022)
+
+
 def _nio_fs_jar() -> tuple[str | None, str]:
     """``(jar, "")`` with the compiled NioLocalFileSystem, built on
-    first use into the temp dir under the source's hash; ``(None,
-    reason)`` when it cannot be built. Concurrent sessions each compile
-    into their own dir and rename a finished jar into place."""
+    first use under the source's hash into this user's private cache
+    dir in the temp dir; ``(None, reason)`` when it cannot be built.
+    The jar goes on the JVM's classpath, so only a jar in a dir that
+    no other user can write is trusted; anything else is compiled
+    again. Concurrent sessions each write their own temp file and
+    rename a finished jar into place."""
     with open(_NIO_FS_SOURCE, "rb") as f:
-        digest = hashlib.sha256(f.read()).hexdigest()[:16]
-    jar = os.path.join(tempfile.gettempdir(),
-                       f"streamprocess_spark_nio_fs_{digest}.jar")
-    if os.path.exists(jar):
+        digest = hashlib.sha256(
+            f.read() + _JAVA_RELEASE.encode()).hexdigest()[:16]
+    cache = os.path.join(tempfile.gettempdir(),
+                         f"streamprocess_spark-{os.getuid()}")
+    with contextlib.suppress(FileExistsError):
+        os.mkdir(cache, 0o700)
+    if not _private(cache, stat.S_ISDIR):
+        return None, f"{cache} is not a dir that only this user can write"
+    jar = os.path.join(cache, f"nio_fs_{digest}.jar")
+    if _private(jar, stat.S_ISREG):
         return jar, ""
     javac = _find_javac()
     if javac is None:
@@ -253,22 +280,28 @@ def _nio_fs_jar() -> tuple[str | None, str]:
                                  "hadoop-client-api-*.jar"))
     if not api:
         return None, "no hadoop-client-api jar to compile against"
-    with tempfile.TemporaryDirectory() as out:
-        r = subprocess.run([javac, "-nowarn", "-cp", api[0], "-d", out,
-                            _NIO_FS_SOURCE], capture_output=True, text=True)
+    with tempfile.TemporaryDirectory(dir=cache) as out:
+        r = subprocess.run([javac, "-nowarn", "--release", _JAVA_RELEASE,
+                            "-cp", api[0], "-d", out, _NIO_FS_SOURCE],
+                           capture_output=True, text=True)
         if r.returncode != 0:
             # the JVM echoes JAVA_TOOL_OPTIONS first; skip to the error
             err = [ln for ln in r.stderr.splitlines()
                    if ln.strip() and not ln.startswith("Picked up ")]
             return None, (f"javac failed on {_NIO_FS_SOURCE}: "
                           f"{err[0] if err else f'exit {r.returncode}'}")
-        tmp = f"{jar}.tmp.{os.getpid()}"
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for root, _dirs, files in os.walk(out):
-                for fn in files:
-                    full = os.path.join(root, fn)
-                    zf.write(full, os.path.relpath(full, out))
-        os.replace(tmp, jar)
+        fd, tmp = tempfile.mkstemp(dir=cache, suffix=".jar.tmp")
+        try:
+            with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
+                for root, _dirs, files in os.walk(out):
+                    for fn in files:
+                        full = os.path.join(root, fn)
+                        zf.write(full, os.path.relpath(full, out))
+            os.replace(tmp, jar)
+        except BaseException:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(tmp)
+            raise
     return jar, ""
 
 

@@ -135,9 +135,9 @@ def test_killed_pipeline_restarts_to_the_batch_answer(spark, tmp_path):
     trigger after a seeded number of committed ones, restart a fresh
     process on the same checkpoint, and require exactly the batch
     sessionizer's segments:
-    every key once with its payload, no extra key, no temp or torn
-    file, and every segment counted by exactly one committed sink
-    batch. Neither process runs a `chmod` process for a checkpoint
+    every key once with its payload, no extra key, no torn file, no
+    temp file left by the restarted run, and every segment counted by
+    exactly one committed sink batch. Neither process runs a `chmod` process for a checkpoint
     file, and the checkpoint keeps Hadoop's modes and checksums."""
     qdir = str(tmp_path / "q")
     rdir = str(tmp_path / "r")
@@ -174,6 +174,11 @@ def test_killed_pipeline_restarts_to_the_batch_answer(spark, tmp_path):
         proc.wait()
     delivered_at_kill = sum(f.endswith(".json") for f in os.listdir(rdir))
     assert delivered_at_kill < len(expected), "killed after the stream drained"
+    # the killed run's Python workers are in pyspark's own process group,
+    # not the one killed, and stop when their JVM's sockets close; let
+    # them go, so the restart's spool files are told apart by mtime
+    time.sleep(1)
+    restarted_at = time.time()
 
     log2 = str(tmp_path / "run2.log")
     with open(log2, "w") as out:
@@ -184,6 +189,13 @@ def test_killed_pipeline_restarts_to_the_batch_answer(spark, tmp_path):
 
     files = os.listdir(rdir)
     assert not [f for f in files if ".tmp." in f], files
+    # the sink spools into _tmp/ and sweeps only files older than 60 s,
+    # so the killed run's torn spool files may stay; the restarted run's
+    # must all have been renamed into place
+    spool = os.path.join(rdir, "_tmp")
+    left = [f for f in os.listdir(spool)
+            if os.stat(os.path.join(spool, f)).st_mtime >= restarted_at]
+    assert not left, left
     results = {}
     for f in files:
         if f.endswith(".json"):

@@ -261,3 +261,51 @@ def test_local_master_gets_filesystem_checkpoint_manager(
     os.chmod(via_os, 0o644)
     assert stat.S_IMODE(via_hadoop.stat().st_mode) == stat.S_IMODE(
         via_os.stat().st_mode) == 0o644
+
+
+def test_nio_fs_jar_is_trusted_only_from_a_private_dir(
+        capsys, monkeypatch, tmp_path):
+    """The compiled filesystem class goes on the JVM's classpath, so
+    the jar is cached only in a dir of this user's that no one else can
+    write: a cached jar that others could have written is compiled
+    again, and a cache dir that is shared, or a symlink, leaves
+    Hadoop's filesystem with one stderr line. The class is Java 17
+    bytecode (Spark 4's minimum), whatever javac built it."""
+    import os
+    import stat
+    import tempfile
+    import zipfile
+
+    from streamprocess_spark import session
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    cache = tmp_path / f"streamprocess_spark-{os.getuid()}"
+    jar, why_not = session._nio_fs_jar()
+    assert why_not == "" and os.path.dirname(jar) == str(cache)
+    assert stat.S_IMODE(cache.stat().st_mode) == 0o700
+    with zipfile.ZipFile(jar) as zf:
+        cls = zf.read("streamprocess_spark/NioLocalFileSystem.class")
+    assert int.from_bytes(cls[6:8], "big") == 61  # class file major: Java 17
+
+    # a jar others could have replaced is not reused
+    with open(jar, "wb") as f:
+        f.write(b"planted")
+    os.chmod(jar, 0o666)
+    assert session._nio_fs_jar() == (jar, "")
+    assert not stat.S_IMODE(os.stat(jar).st_mode) & 0o022
+    with zipfile.ZipFile(jar) as zf:
+        assert zf.read("streamprocess_spark/NioLocalFileSystem.class") == cls
+    assert [p.name for p in cache.iterdir()] == [os.path.basename(jar)]
+
+    # a shared cache dir, or a symlink in its place, is not used at all
+    os.chmod(cache, 0o777)
+    capsys.readouterr()
+    conf = session.local_master_conf("local[2]", "/s")
+    assert "spark.hadoop.fs.file.impl" not in conf
+    assert "spark.driver.extraClassPath" not in conf
+    err = capsys.readouterr().err.splitlines()
+    assert len(err) == 1 and err[0].startswith("[session]") and str(cache) in err[0]
+    os.chmod(cache, 0o700)
+    os.rename(cache, tmp_path / "elsewhere")
+    cache.symlink_to(tmp_path / "elsewhere")
+    assert session._nio_fs_jar()[0] is None
