@@ -155,21 +155,21 @@ def stream_sessionizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exercise multi-batch state
     chunks = chunks_from_events(ev, DEFAULT_CONFIG, max_users=40)
 
-    tmp = tempfile.mkdtemp(prefix="spchunks_")
-    # several files so availableNow+maxFilesPerTrigger crosses state
-    # over micro-batch boundaries
-    chunks.orderBy("ts").coalesce(4).write.mode("overwrite").parquet(tmp)
+    with tempfile.TemporaryDirectory(prefix="spchunks_") as tmp:
+        # several files so availableNow+maxFilesPerTrigger crosses state
+        # over micro-batch boundaries
+        chunks.orderBy("ts").coalesce(4).write.mode("overwrite").parquet(tmp)
 
-    stream = (
-        spark.readStream.schema(CHUNK_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(tmp)
-    )
-    # NoTimeout: this is a deterministic availableNow replay — the
-    # armed idle reap would keep scheduling timeout batches forever
-    # (see sessionize_stream docstring)
-    segs = sessionize_stream(stream, DEFAULT_CONFIG, timeout="NoTimeout")
-    out = run_to_completion(segs, "append")
+        stream = (
+            spark.readStream.schema(CHUNK_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(tmp)
+        )
+        # NoTimeout: this is a deterministic availableNow replay — the
+        # armed idle reap would keep scheduling timeout batches forever
+        # (see sessionize_stream docstring)
+        segs = sessionize_stream(stream, DEFAULT_CONFIG, timeout="NoTimeout")
+        out = run_to_completion(segs, "append")
     return out.drop("mean_energy")
 
 
@@ -467,14 +467,12 @@ def stream_autoscaler(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rate",
         )
     )
-    tmp = tempfile.mkdtemp(prefix="spautoscale_")
-    metrics.coalesce(1).write.mode("overwrite").parquet(tmp)
-    mstream = spark.readStream.schema(metrics.schema).parquet(tmp)
-    from streamprocess_spark.streaming.core import run_to_completion
-
-    return run_to_completion(
-        autoscaler_stream_decisions(mstream), "append"
-    )
+    with tempfile.TemporaryDirectory(prefix="spautoscale_") as tmp:
+        metrics.coalesce(1).write.mode("overwrite").parquet(tmp)
+        mstream = spark.readStream.schema(metrics.schema).parquet(tmp)
+        return run_to_completion(
+            autoscaler_stream_decisions(mstream), "append"
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -753,19 +751,19 @@ def stream_autoscaler_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     metrics = _blend_metrics(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="spblend_")
-    # 4 time-contiguous files + one file per trigger: micro-batch
-    # boundaries land INSIDE cooldowns and regression windows, so the
-    # oracle genuinely checks the carried GroupState (PID fields + the
-    # bounded regression history), not a single-batch replay
-    metrics.orderBy("window_start").coalesce(4).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    mstream = (
-        spark.readStream.schema(metrics.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(tmp)
-    )
-    return run_to_completion(
-        blended_stream_decisions(mstream), "append"
-    )
+    with tempfile.TemporaryDirectory(prefix="spblend_") as tmp:
+        # 4 time-contiguous files + one file per trigger: micro-batch
+        # boundaries land INSIDE cooldowns and regression windows, so the
+        # oracle genuinely checks the carried GroupState (PID fields + the
+        # bounded regression history), not a single-batch replay
+        metrics.orderBy("window_start").coalesce(4).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+        mstream = (
+            spark.readStream.schema(metrics.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(tmp)
+        )
+        return run_to_completion(
+            blended_stream_decisions(mstream), "append"
+        )

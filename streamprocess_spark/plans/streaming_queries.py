@@ -25,14 +25,14 @@ from streamprocess_spark.streaming.core import events_stream, run_to_completion
         "Converged state hash-matches the batch oracle.",
 )
 def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream, _ = events_stream(spark, sf_dir)
-    agg = (
-        stream.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type",
-                "n_events", "total_value")
-    )
-    return run_to_completion(agg, "complete")
+    with events_stream(spark, sf_dir) as stream:
+        agg = (
+            stream.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
+            .select(F.col("w.start").alias("window_start"), "event_type",
+                    "n_events", "total_value")
+        )
+        return run_to_completion(agg, "complete")
 
 
 @register(
@@ -43,13 +43,13 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "analog, config.py:121-122).",
 )
 def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream, _ = events_stream(spark, sf_dir)
-    agg = (
-        stream.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
-        .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
-    )
-    return run_to_completion(agg, "complete")
+    with events_stream(spark, sf_dir) as stream:
+        agg = (
+            stream.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
+            .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
+            .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
+        )
+        return run_to_completion(agg, "complete")
 
 
 @register(
@@ -62,25 +62,25 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the is_final flush semantics (stt_worker.py:396-417).",
 )
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream, _ = events_stream(spark, sf_dir, with_sentinel=True)
-    agg = (
-        stream.withWatermark("ts", "1 minute")
-        .groupBy(F.session_window("ts", AW.SESSION_GAP).alias("w"), "user_id")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value", "session_value"),
+    with events_stream(spark, sf_dir, with_sentinel=True) as stream:
+        agg = (
+            stream.withWatermark("ts", "1 minute")
+            .groupBy(F.session_window("ts", AW.SESSION_GAP).alias("w"), "user_id")
+            .agg(
+                F.min("ts").alias("session_start"),
+                F.max("ts").alias("session_end"),
+                F.count(F.lit(1)).alias("n_events"),
+                dsum("value", "session_value"),
+            )
+            .select("user_id", "session_start", "session_end", "n_events",
+                    "session_value")
+            # sentinel exclusion must key off an AGGREGATED column: a plain
+            # user_id filter would be predicate-pushed below the
+            # EventTimeWatermark node and the sentinel would never advance
+            # the watermark (its own far-future session is withheld anyway)
+            .filter(F.col("session_start") < F.lit("2099-01-01").cast("timestamp"))
         )
-        .select("user_id", "session_start", "session_end", "n_events",
-                "session_value")
-        # sentinel exclusion must key off an AGGREGATED column: a plain
-        # user_id filter would be predicate-pushed below the
-        # EventTimeWatermark node and the sentinel would never advance
-        # the watermark (its own far-future session is withheld anyway)
-        .filter(F.col("session_start") < F.lit("2099-01-01").cast("timestamp"))
-    )
-    return run_to_completion(agg, "append")
+        return run_to_completion(agg, "append")
 
 
 @register(
@@ -94,13 +94,13 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_priority_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streamprocess_spark.plans.dataflow import priority_col
 
-    stream, _ = events_stream(spark, sf_dir)
-    agg = (
-        stream.withColumn("priority", priority_col(F.col("event_type")))
-        .groupBy("priority")
-        .agg(F.count(F.lit(1)).alias("n_jobs"), dsum("value", "total_value"))
-    )
-    return run_to_completion(agg, "complete")
+    with events_stream(spark, sf_dir) as stream:
+        agg = (
+            stream.withColumn("priority", priority_col(F.col("event_type")))
+            .groupBy("priority")
+            .agg(F.count(F.lit(1)).alias("n_jobs"), dsum("value", "total_value"))
+        )
+        return run_to_completion(agg, "complete")
 
 
 @register(
@@ -115,14 +115,14 @@ def stream_priority_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "converged per-user distinct-type counts.",
 )
 def stream_dedup_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream, _ = events_stream(spark, sf_dir)
-    agg = (
-        stream.select("user_id", "event_type")
-        .dropDuplicates(["user_id", "event_type"])
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_types"))
-    )
-    return run_to_completion(agg, "complete")
+    with events_stream(spark, sf_dir) as stream:
+        agg = (
+            stream.select("user_id", "event_type")
+            .dropDuplicates(["user_id", "event_type"])
+            .groupBy("user_id")
+            .agg(F.count(F.lit(1)).alias("n_types"))
+        )
+        return run_to_completion(agg, "complete")
 
 
 @register(
@@ -145,33 +145,33 @@ def stream_dedup_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         "converged output equals the batch join without a sentinel.",
 )
 def stream_request_result_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    req_stream, _ = events_stream(spark, sf_dir)
-    res_stream, _ = events_stream(spark, sf_dir)
-    req = (
-        req_stream.filter(F.col("event_type").isin("view", "click"))
-        .select(
-            F.col("event_id").alias("req_id"),
-            F.col("user_id").alias("r_user"),
-            F.col("ts").alias("req_ts"),
+    with events_stream(spark, sf_dir) as req_stream, \
+            events_stream(spark, sf_dir) as res_stream:
+        req = (
+            req_stream.filter(F.col("event_type").isin("view", "click"))
+            .select(
+                F.col("event_id").alias("req_id"),
+                F.col("user_id").alias("r_user"),
+                F.col("ts").alias("req_ts"),
+            )
+            .withWatermark("req_ts", "20 minutes")
         )
-        .withWatermark("req_ts", "20 minutes")
-    )
-    res = (
-        res_stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("res_id"),
-            F.col("user_id").alias("s_user"),
-            F.col("ts").alias("res_ts"),
+        res = (
+            res_stream.filter(F.col("event_type") == "purchase")
+            .select(
+                F.col("event_id").alias("res_id"),
+                F.col("user_id").alias("s_user"),
+                F.col("ts").alias("res_ts"),
+            )
+            .withWatermark("res_ts", "20 minutes")
         )
-        .withWatermark("res_ts", "20 minutes")
-    )
-    joined = req.join(
-        res,
-        (F.col("r_user") == F.col("s_user"))
-        & (F.col("res_ts") >= F.col("req_ts"))
-        & (F.col("res_ts") <= F.col("req_ts") + F.expr("INTERVAL 10 MINUTES")),
-    ).select("req_id", "res_id", F.col("r_user").alias("user_id"))
-    return run_to_completion(joined, "append")
+        joined = req.join(
+            res,
+            (F.col("r_user") == F.col("s_user"))
+            & (F.col("res_ts") >= F.col("req_ts"))
+            & (F.col("res_ts") <= F.col("req_ts") + F.expr("INTERVAL 10 MINUTES")),
+        ).select("req_id", "res_id", F.col("r_user").alias("user_id"))
+        return run_to_completion(joined, "append")
 
 
 
@@ -210,21 +210,22 @@ def stream_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_latest,
     )
 
-    stream, _ = events_stream(spark, sf_dir)
-    agg = stream.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value")
-    )
+    # the store outlives the query: the returned DataFrame reads it
+    # lazily; the staged source and the checkpoint go once it has ended
     store = tempfile.mkdtemp(prefix="sptopk_")
-    ckpt = tempfile.mkdtemp(prefix="spckpt_")
-
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(compacting_upsert_writer(store, ["user_id"]))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with events_stream(spark, sf_dir) as stream, \
+            tempfile.TemporaryDirectory(prefix="spckpt_") as ckpt:
+        agg = stream.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value")
+        )
+        q = (
+            agg.writeStream.outputMode("update")
+            .foreachBatch(compacting_upsert_writer(store, ["user_id"]))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     # snapshot-isolated read through the commit log: a compaction
     # landing mid-read can never surface an empty/partial store
     latest = read_latest(spark, store, ["user_id"]).drop("batch_id")

@@ -251,6 +251,39 @@ def _private(path: str, is_type) -> bool:
             and not st.st_mode & 0o022)
 
 
+def _cache_dir() -> str:
+    """This user's cache dir in the temp dir, made 0700 if missing;
+    callers check it with ``_private`` before trusting what is in it."""
+    cache = os.path.join(tempfile.gettempdir(),
+                         f"streamprocess_spark-{os.getuid()}")
+    with contextlib.suppress(FileExistsError):
+        os.mkdir(cache, 0o700)
+    return cache
+
+
+def _write_atomically(path: str, write) -> None:
+    """Call ``write(fileobj)`` on a fresh temp file next to ``path``,
+    then rename it into place: a reader never sees a partial file, and
+    a planted file or symlink at a predictable name is never written
+    through."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
+    try:
+        with os.fdopen(fd, "wb") as fh:
+            write(fh)
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)
+        raise
+
+
+def _zip(fh, members: dict[str, str]) -> None:
+    """Write a zip of ``{name in archive: source path}`` to ``fh``."""
+    with zipfile.ZipFile(fh, "w") as zf:
+        for name, full in members.items():
+            zf.write(full, name)
+
+
 def _nio_fs_jar() -> tuple[str | None, str]:
     """``(jar, "")`` with the compiled NioLocalFileSystem, built on
     first use under the source's hash into this user's private cache
@@ -262,10 +295,7 @@ def _nio_fs_jar() -> tuple[str | None, str]:
     with open(_NIO_FS_SOURCE, "rb") as f:
         digest = hashlib.sha256(
             f.read() + _JAVA_RELEASE.encode()).hexdigest()[:16]
-    cache = os.path.join(tempfile.gettempdir(),
-                         f"streamprocess_spark-{os.getuid()}")
-    with contextlib.suppress(FileExistsError):
-        os.mkdir(cache, 0o700)
+    cache = _cache_dir()
     if not _private(cache, stat.S_ISDIR):
         return None, f"{cache} is not a dir that only this user can write"
     jar = os.path.join(cache, f"nio_fs_{digest}.jar")
@@ -290,19 +320,12 @@ def _nio_fs_jar() -> tuple[str | None, str]:
                    if ln.strip() and not ln.startswith("Picked up ")]
             return None, (f"javac failed on {_NIO_FS_SOURCE}: "
                           f"{err[0] if err else f'exit {r.returncode}'}")
-        fd, tmp = tempfile.mkstemp(dir=cache, suffix=".jar.tmp")
-        try:
-            with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
-                for root, _dirs, files in os.walk(out):
-                    for fn in files:
-                        full = os.path.join(root, fn)
-                        zf.write(full, os.path.relpath(full, out))
-            os.replace(tmp, jar)
-        except BaseException:
-            with contextlib.suppress(FileNotFoundError):
-                os.unlink(tmp)
-            raise
+        classes = [os.path.join(root, fn)
+                   for root, _dirs, files in os.walk(out) for fn in files]
+        _write_atomically(jar, lambda fh: _zip(
+            fh, {os.path.relpath(c, out): c for c in classes}))
     return jar, ""
+
 
 
 # RocksDB state-store deployment profile. Stage attribution of the
@@ -413,15 +436,23 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     import streamprocess_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(streamprocess_spark.__file__))
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"streamprocess_spark_pyfiles_{os.getpid()}.zip"
-    )
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    zf.write(full, rel)
+    sources = {
+        os.path.relpath(full, os.path.dirname(pkg_dir)): full
+        for root, _dirs, files in os.walk(pkg_dir)
+        for full in (os.path.join(root, fn) for fn in files)
+        if full.endswith(".py")
+    }
+    digest = hashlib.sha256()
+    for name, full in sorted(sources.items()):
+        with open(full, "rb") as f:
+            data = f.read()
+        digest.update(f"{name}\0{len(data)}\0".encode() + data)
+    cache = _cache_dir()
+    if not _private(cache, stat.S_ISDIR):
+        # a fresh dir of this session's own, never a predictable name
+        cache = tempfile.mkdtemp(prefix="streamprocess_spark_")
+    zpath = os.path.join(cache, f"pyfiles_{digest.hexdigest()[:16]}.zip")
+    if not _private(zpath, stat.S_ISREG):
+        _write_atomically(zpath, lambda fh: _zip(fh, sources))
     spark.sparkContext.addPyFile(zpath)
     _PYFILES_SENT.add(sid)

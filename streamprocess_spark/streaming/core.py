@@ -18,10 +18,12 @@ stt_worker.py:396-417).
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,49 +41,49 @@ SENTINEL_USER = -1
 LAST_RUN: dict = {}
 
 
+@contextlib.contextmanager
 def events_stream(
     spark: SparkSession,
     sf_dir: str,
     with_sentinel: bool = False,
-    files_per_trigger: int | None = None,
-) -> tuple[DataFrame, str]:
-    """File-replay stream of events.parquet. Returns (stream_df,
-    tmp_dir). The parquet is staged into a temp dir (one file = one
-    micro-batch backlog unit); with_sentinel adds a far-future row to
-    flush append-mode watermarks."""
+) -> Iterator[DataFrame]:
+    """File-replay stream of events.parquet. The parquet is staged into
+    a temp dir (one file = one micro-batch backlog unit) that is removed
+    when the ``with`` block exits, so run the query inside it;
+    with_sentinel adds a far-future row to flush append-mode
+    watermarks."""
     from streamprocess_spark.io.tables import table_path
 
-    tmp = tempfile.mkdtemp(prefix="spstream_")
-    src = table_path(sf_dir, "events")  # µs-precision staged copy
-    shutil.copy(src, os.path.join(tmp, "part-000.parquet"))
-    if with_sentinel:
-        sent = spark.createDataFrame(
-            [(int(-1), "2100-01-01 00:00:00", int(SENTINEL_USER), "__sentinel__", 0.0, "{}")],
-            "event_id long, ts string, user_id long, event_type string, value double, props string",
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-        sent.coalesce(1).write.mode("append").parquet(tmp)
-    reader = spark.readStream.schema(EVENTS)
-    if files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
-    return reader.parquet(tmp), tmp
+    with tempfile.TemporaryDirectory(prefix="spstream_") as tmp:
+        src = table_path(sf_dir, "events")  # µs-precision staged copy
+        shutil.copy(src, os.path.join(tmp, "part-000.parquet"))
+        if with_sentinel:
+            sent = spark.createDataFrame(
+                [(int(-1), "2100-01-01 00:00:00", int(SENTINEL_USER), "__sentinel__", 0.0, "{}")],
+                "event_id long, ts string, user_id long, event_type string, value double, props string",
+            ).withColumn("ts", F.col("ts").cast("timestamp"))
+            sent.coalesce(1).write.mode("append").parquet(tmp)
+        yield spark.readStream.schema(EVENTS).parquet(tmp)
 
 
 def run_to_completion(
     stream_df: DataFrame, output_mode: str = "complete"
 ) -> DataFrame:
     """Run a streaming DataFrame to convergence with AvailableNow into
-    a memory sink; return the converged result as a batch DataFrame."""
+    a memory sink; return the converged result as a batch DataFrame.
+    The memory sink holds its rows in the driver, so the query's
+    checkpoint is removed once the query has ended."""
     name = "sink_" + uuid.uuid4().hex[:12]
-    ckpt = tempfile.mkdtemp(prefix="spckpt_")
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with tempfile.TemporaryDirectory(prefix="spckpt_") as ckpt:
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     lp = q.lastProgress
     LAST_RUN.clear()
     # batchId is 0-based and monotone within one query; +1 = number of

@@ -136,14 +136,20 @@ def test_malformed_line_becomes_dead_letter_row(spark, tmp_path):
 def test_torn_write_not_counted_until_newline(spark, tmp_path):
     """latestOffset must not claim a partially-appended line
     (redis XADD is atomic; a torn tail line is an uncommitted entry)."""
-    from streamprocess_spark.io.queue_source import _count_lines, _log_path
+    from streamprocess_spark.io.queue_source import (
+        PriorityQueueStreamReader,
+        _log_path,
+    )
+
+    def committed() -> int:
+        return PriorityQueueStreamReader({"path": qdir}).latestOffset()["high"]
 
     qdir = str(tmp_path / "qt")
     enqueue_job(qdir, "high", {"job_id": "a", "type": "t"})
     log = _log_path(qdir, "high")
     with open(log, "a") as f:
         f.write('{"job_id": "torn", "ty')  # no trailing newline
-    assert _count_lines(log) == 1
+    assert committed() == 1
     register_queue_source(spark)
     df = spark.read.format("priority_queue").option("path", qdir).load()
     # batch scan sees only the committed line
@@ -151,30 +157,40 @@ def test_torn_write_not_counted_until_newline(spark, tmp_path):
     # producer finishes the append → line becomes visible
     with open(log, "a") as f:
         f.write('pe": "t"}\n')
-    assert _count_lines(log) == 2
+    assert committed() == 2
     assert spark.read.format("priority_queue").option("path", qdir).load().count() == 2
+
+
+def _whole_file_index(log: str, grid: int) -> tuple[int, dict[int, int]]:
+    """Committed line count of ``log`` and the start of every
+    ``grid``-th line, from the whole file at once."""
+    from pathlib import Path
+
+    data = Path(log).read_bytes() if Path(log).exists() else b""
+    ends = [i + 1 for i, b in enumerate(data) if b == ord("\n")]
+    index = {0: 0}
+    index.update({n: ends[n - 1] for n in range(grid, len(ends) + 1, grid)})
+    return len(ends), index
 
 
 def test_latest_offset_scans_incrementally(tmp_path, monkeypatch):
     """latestOffset resumes each log scan after the last counted
     newline: across appends (a torn line completed later included) its
-    counts and byte index equal a fresh full ``_scan_log``, and a log
-    truncated below the resume point raises."""
-    import pytest
-
+    counts and byte index equal a whole-file count, and a log truncated
+    below the resume point raises."""
     from streamprocess_spark.io import queue_source as qs
 
     monkeypatch.setattr(qs, "_SCAN_BLOCK", 7)  # lines span block edges
+    monkeypatch.setattr(qs, "READ_PARTITION_LINES", 3)
     qdir = str(tmp_path / "qi")
-    reader = qs.PriorityQueueStreamReader(
-        {"path": qdir, "read_partition_lines": "3"})
+    reader = qs.PriorityQueueStreamReader({"path": qdir})
 
     def check():
         end = reader.latestOffset()
         for p in qs.PRIORITIES:
-            n, index = qs._scan_log(qs._log_path(qdir, p), 3)
+            n, index = _whole_file_index(qs._log_path(qdir, p), 3)
             assert end[p] == n
-            assert reader._index[p] == (index or {0: 0})
+            assert reader._index[p] == index
 
     check()  # no logs yet
     log = qs._log_path(qdir, "high")
@@ -364,10 +380,10 @@ class TestOffsetCommitLedger:
         assert seq == sorted(seq)
 
     def test_drain_survives_pure_latest_offset(self, spark, tmp_path):
-        """Round-9 advice: a q155-style drive loop (latestOffset +
-        partitions per trigger, the engine's own call sequence) must
-        produce the identical ledger under a PURE latestOffset — one
-        that never advances reader state, the warc reader's documented
+        """A q155-style drive loop (latestOffset + partitions per
+        trigger, the engine's own call sequence) must produce the
+        identical ledger under a PURE latestOffset — one that never
+        advances the reader's cursor, the warc reader's documented
         style — because partitions() is the re-anchor point, including
         from a fresh (None) cursor. Without the partitions() re-anchor
         the pure reader re-budgets from zero forever and the loop exits
@@ -375,17 +391,13 @@ class TestOffsetCommitLedger:
         from streamprocess_spark.io.queue_source import (
             PRIORITIES,
             PriorityQueueStreamReader,
-            _count_lines,
-            _log_path,
             enqueue_job,
         )
 
         class PureReader(PriorityQueueStreamReader):
             def latestOffset(self):  # cursor-free: read-only planning
-                avail = {
-                    p: _count_lines(_log_path(self.path, p))
-                    for p in PRIORITIES
-                }
+                avail = PriorityQueueStreamReader(
+                    {"path": self.path}).latestOffset()
                 if self.max_per_batch is None:
                     return avail
                 base = self._cursor or {p: 0 for p in PRIORITIES}
@@ -449,110 +461,10 @@ class TestOffsetCommitLedger:
             ).all()
 
 
-def test_arrow_read_path_matches_row_contract(tmp_path):
-    """Round 10: readers yield pyarrow RecordBatches; the batch values
-    must be exactly the `_row` tuples (same order, same types), the
-    range split must tile [start, end) without gap/overlap, and empty
-    ranges must yield no batches."""
-    import pyarrow as pa
-
-    from streamprocess_spark.io.queue_source import (
-        QueuePartition,
-        _read_arrow,
-        _read_lines,
-        _row,
-        _split_ranges,
-        enqueue_job,
-        _log_path,
-    )
-
-    qdir = str(tmp_path / "q")
-    for i in range(25):
-        enqueue_job(qdir, "high", {"job_id": f"j{i}", "type": "t",
-                                   "payload": {"k": i}})
-    # malformed line rides along (dead-letter row contract)
-    with open(_log_path(qdir, "high"), "a") as f:
-        f.write("not json\n")
-
-    parts = _split_ranges("high", 0, 26, chunk=10)
-    assert [(p.start, p.end) for p in parts] == [(0, 10), (10, 20), (20, 26)]
-    got = []
-    for p in parts:
-        for rb in _read_arrow(QueuePartition(qdir, [p])):
-            assert isinstance(rb, pa.RecordBatch)
-            got.extend(tuple(r.values()) for r in rb.to_pylist())
-    ref = [
-        _row("high", seq, job, raw)
-        for seq, job, raw in _read_lines(_log_path(qdir, "high"), 0, 26)
-    ]
-    assert got == ref and len(got) == 26
-    assert list(_read_arrow(QueuePartition(qdir))) == []
-
-
-def test_byte_index_seek_matches_skip_scan(tmp_path):
-    """Round 11 (advice): the planner's every-chunk-lines byte index
-    lets each range-split task seek to its grid anchor instead of
-    line-skipping the file prefix. Values must be identical either
-    way, off-grid starts (checkpoint restarts) must anchor to the
-    preceding grid line, and splits must align to the GLOBAL chunk
-    grid so at most one partition per range starts off-grid."""
-    from streamprocess_spark.io.queue_source import (
-        _log_path,
-        _read_lines,
-        _scan_log,
-        _split_ranges,
-        enqueue_job,
-    )
-
-    qdir = str(tmp_path / "q")
-    for i in range(57):
-        enqueue_job(qdir, "normal", {"job_id": f"j{i}", "type": "t",
-                                     "payload": {"k": i, "pad": "x" * i}})
-    log = _log_path(qdir, "normal")
-    n, index = _scan_log(log, 10)
-    assert n == 57
-    assert sorted(index) == [0, 10, 20, 30, 40, 50]
-    # index byte offsets are real line starts
-    with open(log, "rb") as f:
-        data = f.read()
-    for ln, off in index.items():
-        assert off == 0 or data[off - 1] == ord("\n")
-
-    # off-grid start (restart at line 13): splits align to the grid
-    parts = _split_ranges("normal", 13, 57, chunk=10, index=index)
-    assert [(p.start, p.end) for p in parts] == [
-        (13, 20), (20, 30), (30, 40), (40, 50), (50, 57)]
-    assert [(p.anchor_line) for p in parts] == [10, 20, 30, 40, 50]
-    got = [
-        (seq, job)
-        for p in parts
-        for seq, job, _ in _read_lines(log, p.start, p.end,
-                                       p.anchor_line, p.anchor_byte)
-    ]
-    ref = [(seq, job) for seq, job, _ in _read_lines(log, 13, 57)]
-    assert got == ref and len(got) == 44
-
-    # a seek-anchored read never touches bytes before its anchor:
-    # truncating the prefix under the anchor still reads correctly
-    p = parts[1]  # [20, 30) anchored at line 20
-    hole = bytearray(data)
-    for b in range(index[20]):
-        hole[b] = ord("#")  # corrupt everything before the anchor
-    mutated = str(tmp_path / "mut.jsonl")
-    with open(mutated, "wb") as f:
-        f.write(bytes(hole))
-    via_seek = [(s, j) for s, j, _ in _read_lines(
-        mutated, p.start, p.end, p.anchor_line, p.anchor_byte)]
-    assert via_seek == [(s, j) for s, j, _ in _read_lines(log, 20, 30)]
-
-
-def _plan(qdir: str, lines: int | None, start: dict | None = None):
+def _plan(qdir: str, start: dict | None = None):
     from streamprocess_spark.io.queue_source import PriorityQueueStreamReader
 
-    opts = {"path": qdir}
-    if lines is not None:
-        opts["read_partition_lines"] = str(lines)
-    reader = PriorityQueueStreamReader(opts)
+    reader = PriorityQueueStreamReader({"path": qdir})
     end = reader.latestOffset()
     start = start or {p: 0 for p in PRIORITIES}
     return reader, end, reader.partitions(start, end)
@@ -564,44 +476,136 @@ def _rows(reader, parts) -> list[tuple]:
 
 
 def _ref_rows(qdir: str, start: dict, end: dict) -> list[tuple]:
+    """The rows of [start, end) per priority, each log read from its
+    first line (line 0 at byte 0)."""
     from streamprocess_spark.io.queue_source import _log_path, _read_lines, _row
 
     return [_row(p, seq, job, raw)
-            for p in PRIORITIES
+            for p in PRIORITIES if end[p] > start[p]
             for seq, job, raw in _read_lines(_log_path(qdir, p),
-                                             start[p], end[p])]
+                                             start[p], end[p], 0, 0)]
+
+
+def test_arrow_read_path_matches_row_contract(tmp_path, monkeypatch):
+    """Readers yield pyarrow RecordBatches; the batch values must be
+    exactly the `_row` tuples (same order, same types), the grid cuts
+    must tile [start, end) without gap/overlap, and a partition without
+    ranges must yield no batches."""
+    import pyarrow as pa
+
+    from streamprocess_spark.io import queue_source as qs
+
+    monkeypatch.setattr(qs, "READ_PARTITION_LINES", 10)
+    qdir = str(tmp_path / "q")
+    for i in range(25):
+        enqueue_job(qdir, "high", {"job_id": f"j{i}", "type": "t",
+                                   "payload": {"k": i}})
+    # malformed line rides along (dead-letter row contract)
+    with open(qs._log_path(qdir, "high"), "a") as f:
+        f.write("not json\n")
+
+    reader, end, parts = _plan(qdir)
+    assert [[(r.start, r.end) for r in p.ranges] for p in parts] == [
+        [(0, 10)], [(10, 20)], [(20, 26)]]
+    got = []
+    for p in parts:
+        for rb in reader.read(p):
+            assert isinstance(rb, pa.RecordBatch)
+            got.extend(tuple(r.values()) for r in rb.to_pylist())
+    assert got == _ref_rows(qdir, reader.initialOffset(), end)
+    assert len(got) == 26
+    assert list(reader.read(qs.QueuePartition(qdir))) == []
+
+
+def test_byte_index_seek_matches_skip_scan(tmp_path, monkeypatch):
+    """The planner's every-grid-lines byte index lets each range's task
+    seek to its grid line instead of line-skipping the file prefix.
+    Values must equal a read from the top of the log, off-grid starts
+    (checkpoint restarts) must anchor to the preceding grid line, and
+    cuts must align to the GLOBAL grid so only a priority's first
+    range can start off-grid."""
+    from pathlib import Path
+
+    from streamprocess_spark.io import queue_source as qs
+
+    monkeypatch.setattr(qs, "READ_PARTITION_LINES", 10)
+    qdir = str(tmp_path / "q")
+    for i in range(57):
+        enqueue_job(qdir, "normal", {"job_id": f"j{i}", "type": "t",
+                                     "payload": {"k": i, "pad": "x" * i}})
+    log = qs._log_path(qdir, "normal")
+    # off-grid start (restart at line 13)
+    start = dict({p: 0 for p in PRIORITIES}, normal=13)
+    reader, end, parts = _plan(qdir, start)
+    assert end["normal"] == 57
+    index = reader._index["normal"]
+    assert sorted(index) == [0, 10, 20, 30, 40, 50]
+    # index byte offsets are real line starts
+    data = Path(log).read_bytes()
+    for off in index.values():
+        assert off == 0 or data[off - 1] == ord("\n")
+
+    ranges = [r for p in parts for r in p.ranges]
+    assert [(r.start, r.end, r.anchor_line) for r in ranges] == [
+        (13, 20, 10), (20, 30, 20), (30, 40, 30), (40, 50, 40), (50, 57, 50)]
+    assert all(r.anchor_byte == index[r.anchor_line] for r in ranges)
+    got = [
+        (seq, job)
+        for r in ranges
+        for seq, job, _ in qs._read_lines(log, r.start, r.end,
+                                          r.anchor_line, r.anchor_byte)
+    ]
+    ref = [(seq, job) for seq, job, _ in qs._read_lines(log, 13, 57, 0, 0)]
+    assert got == ref and len(got) == 44
+
+    # a seek-anchored read never touches bytes before its anchor:
+    # corrupting the prefix under the anchor still reads correctly
+    r = ranges[1]  # [20, 30) anchored at line 20
+    hole = bytearray(data)
+    for b in range(index[20]):
+        hole[b] = ord("#")  # corrupt everything before the anchor
+    mutated = str(tmp_path / "mut.jsonl")
+    with open(mutated, "wb") as f:
+        f.write(bytes(hole))
+    via_seek = [(s, j) for s, j, _ in qs._read_lines(
+        mutated, r.start, r.end, r.anchor_line, r.anchor_byte)]
+    assert via_seek == [(s, j) for s, j, _ in qs._read_lines(log, 20, 30, 0, 0)]
 
 
 def test_small_priority_ranges_pack_into_one_read_partition(tmp_path):
     """A trigger's few lines across all four priorities are one read
     task, and it yields exactly the unpacked ranges' rows in the
     realtime→low drain order."""
+    from streamprocess_spark.io.queue_source import QueuePartition
+
     qdir = str(tmp_path / "q")
     _seed(qdir, n_per_prio=30)
     start = {"realtime": 0, "high": 7, "normal": 29, "low": 3}
-    reader, end, parts = _plan(qdir, None, start)
+    reader, end, parts = _plan(qdir, start)
     assert len(parts) == 1
     assert [(r.priority, r.start, r.end) for r in parts[0].ranges] == [
         ("realtime", 0, 30), ("high", 7, 30), ("normal", 29, 30),
         ("low", 3, 30)]
     got = _rows(reader, parts)
     assert got == _ref_rows(qdir, start, end) and len(got) == 81
-    _, _, unpacked = _plan(qdir, 0, start)
-    assert len(unpacked) == 4 and _rows(reader, unpacked) == got
+    unpacked = [QueuePartition(qdir, [r]) for r in parts[0].ranges]
+    assert _rows(reader, unpacked) == got
 
 
-def test_large_ranges_keep_the_grid_split(tmp_path):
-    """Ranges of at least ``chunk`` lines stay cut on the global grid,
-    no partition holds more than ``chunk`` lines, and packing only
-    joins neighbours: the rows read are the unpacked ranges' rows."""
-    from streamprocess_spark.io.queue_source import PriorityQueueBatchReader
+def test_large_ranges_keep_the_grid_split(tmp_path, monkeypatch):
+    """Ranges of at least a grid's lines stay cut on the global grid,
+    no partition holds more than a grid's lines, and packing only
+    joins neighbours: the rows read are the unpacked ranges' rows. The
+    batch reader plans through the stream reader."""
+    from streamprocess_spark.io import queue_source as qs
 
+    monkeypatch.setattr(qs, "READ_PARTITION_LINES", 10)
     qdir = str(tmp_path / "q")
     _seed(qdir, n_per_prio=4)
     for i in range(4, 27):
         enqueue_job(qdir, "high", {"job_id": f"high-{i}", "type": "t"})
     start = {"realtime": 1, "high": 3, "normal": 0, "low": 0}
-    reader, end, parts = _plan(qdir, 10, start)
+    reader, end, parts = _plan(qdir, start)
     assert end == {"realtime": 4, "high": 27, "normal": 4, "low": 4}
     assert [[(r.priority, r.start, r.end) for r in p.ranges] for p in parts] == [
         [("realtime", 1, 4), ("high", 3, 10)],
@@ -615,25 +619,48 @@ def test_large_ranges_keep_the_grid_split(tmp_path):
                    if r.priority == "high" and r.start != 3)
     assert _rows(reader, parts) == _ref_rows(qdir, start, end)
 
-    batch = PriorityQueueBatchReader({"path": qdir,
-                                      "read_partition_lines": "10"})
+    batch = qs.PriorityQueueBatchReader({"path": qdir})
     bparts = batch.partitions()
+    # range for range and anchor for anchor, the stream plan from the
+    # first line to latestOffset()
+    stream = qs.PriorityQueueStreamReader({"path": qdir})
+    plan = stream.partitions(stream.initialOffset(), stream.latestOffset())
+    assert [p.ranges for p in bparts] == [p.ranges for p in plan]
     assert max(sum(r.end - r.start for r in p.ranges) for p in bparts) <= 10
     assert _rows(batch, bparts) == _ref_rows(
         qdir, {p: 0 for p in PRIORITIES}, end)
 
 
-def test_zero_read_partition_lines_keeps_one_partition_per_priority(tmp_path):
+def test_default_grid_cuts_each_priority_at_512_lines(tmp_path):
+    """At the default 512-line grid each 600-line priority is cut at
+    line 512, and no 88-line tail fits beside the next priority's 512
+    lines."""
     qdir = str(tmp_path / "q")
     _seed(qdir, n_per_prio=600)
     start = {p: 0 for p in PRIORITIES}
-    reader, end, parts = _plan(qdir, 0, start)
-    assert [[(r.priority, r.start, r.end) for r in p.ranges] for p in parts] == [
-        [(p, 0, 600)] for p in PRIORITIES]
-    assert _rows(reader, parts) == _ref_rows(qdir, start, end)
-    # at the default 512-line budget each priority splits at line 512,
-    # and no 88-line tail fits beside the next priority's 512 lines
-    _, _, default = _plan(qdir, None, start)
-    assert [(r.start, r.end) for p in default for r in p.ranges] == [
+    reader, end, parts = _plan(qdir, start)
+    assert [(r.start, r.end) for p in parts for r in p.ranges] == [
         (0, 512), (512, 600)] * 4
-    assert all(len(p.ranges) == 1 for p in default)
+    assert all(len(p.ranges) == 1 for p in parts)
+    assert _rows(reader, parts) == _ref_rows(qdir, start, end)
+
+
+def test_planned_end_past_a_short_log_raises(tmp_path):
+    """A planned end beyond the lines a log holds (say, a checkpoint
+    restarted over a shorter log) fails loudly: reading the 5 lines
+    there and committing offset 8 would lose lines 5–7 for good."""
+    from streamprocess_spark.io.queue_source import PriorityQueueStreamReader
+
+    qdir = str(tmp_path / "q")
+    for i in range(5):
+        enqueue_job(qdir, "high", {"job_id": f"h{i}", "type": "t"})
+    start = {p: 0 for p in PRIORITIES}
+    end = dict(start, high=8)
+    msg = r"high\.jsonl holds 5 committed lines, fewer than the planned end offset 8"
+    restarted = PriorityQueueStreamReader({"path": qdir})  # no scan yet
+    with pytest.raises(RuntimeError, match=msg):
+        restarted.partitions(start, end)
+    scanned = PriorityQueueStreamReader({"path": qdir})
+    assert scanned.latestOffset()["high"] == 5
+    with pytest.raises(RuntimeError, match=msg):
+        scanned.partitions(start, end)

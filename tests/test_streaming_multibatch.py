@@ -309,3 +309,50 @@ def test_nio_fs_jar_is_trusted_only_from_a_private_dir(
     os.rename(cache, tmp_path / "elsewhere")
     cache.symlink_to(tmp_path / "elsewhere")
     assert session._nio_fs_jar()[0] is None
+
+
+def test_worker_package_zip_is_cached_privately(monkeypatch, tmp_path):
+    """The package zip shipped to Python workers is written once per
+    hash of its sources into this user's private cache dir and reused
+    by the next session; nothing lands at a predictable name in the
+    shared temp dir."""
+    import stat
+    import types
+    import zipfile
+
+    from streamprocess_spark import session
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(session, "_PYFILES_SENT", set())
+    shipped: list[str] = []
+
+    def fake_session(app_id: str):
+        sc = types.SimpleNamespace(applicationId=app_id,
+                                   addPyFile=shipped.append)
+        return types.SimpleNamespace(sparkContext=sc)
+
+    session.ensure_workers_can_import(fake_session("app-1"))
+    first = os.stat(shipped[0])
+    session.ensure_workers_can_import(fake_session("app-2"))
+    assert len(shipped) == 2 and shipped[0] == shipped[1]
+    assert os.stat(shipped[1]).st_ino == first.st_ino  # reused, not rewritten
+    cache = tmp_path / f"streamprocess_spark-{os.getuid()}"
+    assert os.path.dirname(shipped[0]) == str(cache)
+    assert stat.S_IMODE(cache.stat().st_mode) == 0o700
+    assert not stat.S_IMODE(first.st_mode) & 0o022
+    with zipfile.ZipFile(shipped[0]) as zf:
+        assert "streamprocess_spark/io/queue_source.py" in zf.namelist()
+    assert not list(tmp_path.glob("streamprocess_spark_pyfiles_*"))
+
+
+def test_streaming_builders_leave_no_temp_dirs(spark, monkeypatch, tmp_path):
+    """A replay builder's staged source and checkpoint are removed once
+    its query has ended: the memory sink holds the rows in the driver."""
+    from streamprocess_spark.plans import query_map
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = query_map()["stream_tumbling_window"](spark, SF_DIR).collect()
+    assert rows
+    left = [p.name for p in tmp_path.iterdir()
+            if p.name.startswith(("spstream_", "spckpt_"))]
+    assert left == []
