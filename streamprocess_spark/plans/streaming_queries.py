@@ -210,11 +210,11 @@ def stream_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_latest,
     )
 
-    # the store outlives the query: the returned DataFrame reads it
-    # lazily; the staged source and the checkpoint go once it has ended
-    store = tempfile.mkdtemp(prefix="sptopk_")
+    # the staged source, the checkpoint and the store all go once the
+    # top 10 are read: the returned DataFrame holds those rows itself
     with events_stream(spark, sf_dir) as stream, \
-            tempfile.TemporaryDirectory(prefix="spckpt_") as ckpt:
+            tempfile.TemporaryDirectory(prefix="spckpt_") as ckpt, \
+            tempfile.TemporaryDirectory(prefix="sptopk_") as store:
         agg = stream.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value")
         )
@@ -226,7 +226,8 @@ def stream_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    # snapshot-isolated read through the commit log: a compaction
-    # landing mid-read can never surface an empty/partial store
-    latest = read_latest(spark, store, ["user_id"]).drop("batch_id")
-    return latest.orderBy(F.desc("total_value"), F.asc("user_id")).limit(10)
+        # snapshot-isolated read through the commit log: a compaction
+        # landing mid-read can never surface an empty/partial store
+        latest = read_latest(spark, store, ["user_id"]).drop("batch_id")
+        top = latest.orderBy(F.desc("total_value"), F.asc("user_id")).limit(10)
+        return spark.createDataFrame(top.collect(), top.schema)

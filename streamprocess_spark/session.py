@@ -112,7 +112,8 @@ def get_spark(
     #   - the package's parent dir, so task workers can run the
     #     pre-warmed daemon (worker_daemon.py): forked workers inherit
     #     numpy/pandas/Arrow-serializer imports instead of re-importing
-    #     them. spark.python.daemon.module reaches task runners only;
+    #     them, in a frozen heap that the full gc.collect() after each
+    #     task skips. spark.python.daemon.module reaches task runners only;
     #     data-source planner runners (the per-trigger write setup and
     #     sink commit) call the createPythonWorker overload that
     #     hardcodes the stock pyspark.daemon;

@@ -72,7 +72,9 @@ def run_to_completion(
     """Run a streaming DataFrame to convergence with AvailableNow into
     a memory sink; return the converged result as a batch DataFrame.
     The memory sink holds its rows in the driver, so the query's
-    checkpoint is removed once the query has ended."""
+    checkpoint is removed once the query has ended. The returned
+    DataFrame's analyzed plan holds the sink itself, so the sink's temp
+    view is dropped: its rows live only as long as the result does."""
     name = "sink_" + uuid.uuid4().hex[:12]
     with tempfile.TemporaryDirectory(prefix="spckpt_") as ckpt:
         q = (
@@ -89,4 +91,7 @@ def run_to_completion(
     # batchId is 0-based and monotone within one query; +1 = number of
     # micro-batches the AvailableNow replay actually ran
     LAST_RUN["batches"] = (int(lp["batchId"]) + 1) if lp else 0
-    return stream_df.sparkSession.table(name)
+    spark = stream_df.sparkSession
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result

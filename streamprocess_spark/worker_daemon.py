@@ -8,6 +8,19 @@ the fork loop starts, so children inherit them via copy-on-write — a
 fork costs pages, not imports. Values are untouched: this changes
 process warm-up, never execution.
 
+After the pre-imports the daemon calls ``gc.freeze()`` before it starts
+forking, the ``gc`` module's own recipe for a parent that forks. A
+reused worker runs a full ``gc.collect()`` after every task
+(``pyspark/daemon.py``), and without the freeze each of those walks the
+~75k objects inherited from the daemon (20-30 ms per task on a 4-core
+x86 host), longer in a fresh fork, where the walk also un-shares every
+page it touches. Spark
+hands a released worker out again at once, so the next Python runner of
+the same task (``applyInPandasWithState``'s timeout pass after its data
+pass) waited for that collection. Frozen objects sit in the permanent
+generation: collections skip them, their pages stay shared, and cycles
+a task creates are still collected.
+
 Which processes get what:
 
 - **Pre-imports: task workers only.** Spark launches a daemon with
@@ -64,6 +77,9 @@ for _mod in (
 
 
 if __name__ == "__main__":
+    import gc
+
     from pyspark.daemon import manager
 
+    gc.freeze()
     manager()

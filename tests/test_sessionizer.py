@@ -5,7 +5,6 @@ replay, streaming == batch convergence, reference-derived invariants
 from __future__ import annotations
 
 import json
-import tempfile
 
 import numpy as np
 import pandas as pd
@@ -85,13 +84,13 @@ class TestCore:
 
 @pytest.mark.slow
 class TestConvergence:
-    def test_stream_equals_batch(self, spark):
+    def test_stream_equals_batch(self, spark, tmp_path):
         ev = load_tables(spark, SF_DIR)["events"]
         chunks = chunks_from_events(ev, CFG, max_users=30)
 
         batch = sessionize_batch(chunks, CFG).toPandas()
 
-        tmp = tempfile.mkdtemp(prefix="sessconv_")
+        tmp = str(tmp_path / "chunks")
         chunks.orderBy("ts").coalesce(5).write.mode("overwrite").parquet(tmp)
         stream = (
             spark.readStream.schema(CHUNK_SCHEMA)

@@ -346,13 +346,17 @@ def test_worker_package_zip_is_cached_privately(monkeypatch, tmp_path):
 
 
 def test_streaming_builders_leave_no_temp_dirs(spark, monkeypatch, tmp_path):
-    """A replay builder's staged source and checkpoint are removed once
-    its query has ended: the memory sink holds the rows in the driver."""
+    """A replay builder's staged source, checkpoint, upsert store and
+    memory-sink view are gone once its query has ended: the returned
+    DataFrame holds the rows itself."""
     from streamprocess_spark.plans import query_map
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    rows = query_map()["stream_tumbling_window"](spark, SF_DIR).collect()
-    assert rows
+    for name in ("stream_tumbling_window", "stream_topk_users"):
+        assert query_map()[name](spark, SF_DIR).collect(), name
     left = [p.name for p in tmp_path.iterdir()
-            if p.name.startswith(("spstream_", "spckpt_"))]
+            if p.name.startswith(("spstream_", "spckpt_", "sptopk_"))]
     assert left == []
+    views = [t.name for t in spark.catalog.listTables()
+             if t.name.startswith("sink_")]
+    assert views == []

@@ -18,7 +18,7 @@ from tests.conftest import SF_DIR
 N_SPLITS = 4
 
 
-def test_update_mode_revisions_converge(spark):
+def test_update_mode_revisions_converge(spark, tmp_path):
     from pyspark.sql.window import Window
     from streamprocess_spark.io.tables import load_tables, table_path
 
@@ -60,7 +60,7 @@ def test_update_mode_revisions_converge(spark):
             }
             revisions.append((batch_id, rows))
 
-        ckpt = tempfile.mkdtemp(prefix="spupdckpt_")
+        ckpt = str(tmp_path / "ckpt")
         q = (
             agg.writeStream.outputMode("update")
             .foreachBatch(capture)
@@ -207,7 +207,7 @@ def test_compacting_upsert_store_stays_bounded(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
-def test_concurrent_reader_during_compaction(spark):
+def test_concurrent_reader_during_compaction(spark, tmp_path):
     """Round-4 verdict #2: a reader racing a compaction must NEVER
     observe an empty or partial store. The store is driven through 16
     upsert batches (4 compaction rewrites) while a reader thread
@@ -221,7 +221,7 @@ def test_concurrent_reader_during_compaction(spark):
     )
 
     n_keys, n_batches, compact_every = 100, 16, 4
-    store = os.path.join(tempfile.mkdtemp(prefix="spccr_"), "store")
+    store = str(tmp_path / "store")
     upsert = compacting_upsert_writer(store, ["k"], compact_every)
 
     done = threading.Event()

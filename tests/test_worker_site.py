@@ -147,3 +147,44 @@ def test_guard_reaches_planner_processes(spark, tmp_path):
     with open(probe) as f:
         seen = {tuple(line.split(" ", 1)) for line in f.read().splitlines()}
     assert seen == {("setup", GUARD_FILE), ("commit", GUARD_FILE)}
+
+
+def test_task_workers_inherit_a_frozen_heap(spark):
+    """The pre-warmed daemon freezes its heap before it forks, so the
+    full ``gc.collect()`` a reused worker runs after every task skips
+    the inherited objects; a cycle the task itself makes is still
+    freed."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") == (
+        "streamprocess_spark.worker_daemon"
+    )
+
+    def probe(batches):
+        import gc
+        import weakref
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        freed = []
+
+        class Node:
+            pass
+
+        a, b = Node(), Node()
+        a.peer, b.peer = b, a
+        weakref.finalize(a, freed.append, True)
+        del a, b
+        gc.collect()
+        yield pd.DataFrame(
+            {"frozen": [gc.get_freeze_count()], "freed": [bool(freed)]}
+        )
+
+    [row] = (
+        spark.range(1, numPartitions=1)
+        .mapInPandas(probe, "frozen long, freed boolean")
+        .collect()
+    )
+    assert row.frozen >= 10_000
+    assert row.freed
